@@ -539,22 +539,24 @@ def hashed_shingles(
     )
 
 
+def _seeded_hash(i: int, h: Column, portable: bool) -> Column:
+    """The i-th MinHash function of a shingle hash: ``md5('i:' || h)``
+    for the portable family, ``xxhash64(i, h)`` otherwise."""
+    if portable:
+        return F.md5(F.concat(F.lit(f"{i}:"), h))
+    return F.xxhash64(F.lit(i), h)
+
+
 def _signatures_from_hashes(
     hashed: DataFrame, id_col: str, num_hashes: int, portable: bool = False
 ) -> DataFrame:
     # one variable-length string hash per shingle (already done), then k
     # cheap fixed-width rehashes of the long — k× cheaper than hashing
     # the shingle string k times, same independence in practice
-    if portable:
-        mins = [
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("_h")))).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        mins = [
-            F.min(F.xxhash64(F.lit(i), F.col("_h"))).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
+    mins = [
+        F.min(_seeded_hash(i, F.col("_h"), portable)).alias(f"mh{i}")
+        for i in range(num_hashes)
+    ]
     return hashed.groupBy(id_col).agg(*mins)
 
 
@@ -648,22 +650,16 @@ def minhash_dedup_pairs(
     sh_rows = hashed.groupBy(id_col).agg(
         F.sort_array(F.collect_set("_h")).alias("_sh")
     )
-    if portable:
-        mins = [
-            F.array_min(
-                F.transform(
-                    "_sh", lambda h, i=i: F.md5(F.concat(F.lit(f"{i}:"), h))
-                )
-            ).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
-    else:
-        mins = [
-            F.array_min(
-                F.transform("_sh", lambda h, i=i: F.xxhash64(F.lit(i), h))
-            ).alias(f"mh{i}")
-            for i in range(num_hashes)
-        ]
+
+    def _seeded(i: int):
+        return lambda h: _seeded_hash(i, h, portable)
+
+    # PySpark binds a lambda's second parameter to the element index, so
+    # the seed is closed over by _seeded, never passed as a default arg.
+    mins = [
+        F.array_min(F.transform("_sh", _seeded(i))).alias(f"mh{i}")
+        for i in range(num_hashes)
+    ]
     staged = sh_rows.select(F.col(id_col), "_sh", *mins).localCheckpoint()
     sigs = staged.drop("_sh")
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands, portable)

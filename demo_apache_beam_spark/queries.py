@@ -928,7 +928,7 @@ def _neardup_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neardup_pairs",
             sf_dir,
             "documents",
-            f"minhash:portable:k={_MH_PORT_K}:bands={_MH_PORT_BANDS}:thr=0.5:v1",
+            f"minhash:portable:k={_MH_PORT_K}:bands={_MH_PORT_BANDS}:thr=0.5:v2",
             lambda path, _t: _neardup_pairs_inline(spark, sf_dir)
             .write.mode("overwrite")
             .parquet(path),
@@ -963,7 +963,7 @@ def _neardup_clusters_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neardup_clusters",
             sf_dir,
             "documents",
-            f"minhash:portable:k={_MH_PORT_K}:bands={_MH_PORT_BANDS}:thr=0.5:cc:v1",
+            f"minhash:portable:k={_MH_PORT_K}:bands={_MH_PORT_BANDS}:thr=0.5:cc:v2",
             lambda path, _t: inline().write.mode("overwrite").parquet(path),
             lambda path, _t: spark.read.parquet(path).select("doc_id", "cluster_id"),
         )

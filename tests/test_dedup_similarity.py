@@ -4,6 +4,7 @@ the exact brute-force baseline."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import SF_MEDIUM, SF_SMALL
@@ -44,6 +45,68 @@ def test_minhash_portable_finds_planted_near_dups(spark):
     assert recall >= 0.9, f"portable minhash recall {recall}: {planted - got}"
     jacc = REGISTRY["dedup_minhash_portable"].fn(spark, SF_SMALL)
     assert jacc.filter(F.col("jaccard") < 0.5).count() == 0
+
+
+# an exact twin pair, then one to four words of the base swapped out
+# (graded similarity, so band collisions depend on the signature
+# values), and one document that shares no shingle with the rest
+_SIG_BASE = "the quick brown fox jumps over the lazy dog by the river bank"
+
+
+def _swap_words(positions):
+    words = _SIG_BASE.split()
+    for p in positions:
+        words[p] = f"xx{p}"
+    return " ".join(words)
+
+
+_SIG_DOCS = [
+    (1, _SIG_BASE),
+    (2, _SIG_BASE),
+    (3, _swap_words([3])),
+    (4, _swap_words([1, 7])),
+    (5, _swap_words([2, 6, 10])),
+    (6, _swap_words([0, 4, 8, 11])),
+    (7, "sailing ships cross vast oceans guided by stars and seasoned captains"),
+]
+
+
+@pytest.mark.parametrize("portable", [False, True], ids=["xxhash64", "md5"])
+@pytest.mark.parametrize("num_hashes,bands", [(16, 4), (32, 8), (16, 16)])
+def test_minhash_pairs_signatures_match_aggregate(spark, portable, num_hashes, bands):
+    """The per-row array_min signatures staged by minhash_dedup_pairs must
+    be the documented seeded minima of minhash_signatures: with
+    verification off, its pairs are exactly the LSH candidates banded
+    from the aggregate signatures, for both hash families."""
+    from demo_apache_beam_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_dedup_pairs,
+        minhash_signatures,
+    )
+
+    df = spark.createDataFrame(_SIG_DOCS, "doc_id long, text string")
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in minhash_dedup_pairs(
+            df,
+            num_hashes=num_hashes,
+            bands=bands,
+            verify_threshold=0.0,
+            portable=portable,
+        ).collect()
+    }
+    sigs = minhash_signatures(df, num_hashes=num_hashes, portable=portable)
+    expect = {
+        (r["id_a"], r["id_b"])
+        for r in lsh_candidate_pairs(
+            sigs, num_hashes=num_hashes, bands=bands, portable=portable
+        ).collect()
+    }
+    assert got == expect
+    # the exact twins collide in every band; the unrelated document
+    # shares no shingle, so it pairs with nothing
+    assert (1, 2) in expect
+    assert not any(7 in p for p in expect)
 
 
 def test_near_dup_clusters_group_planted_pairs(spark):
