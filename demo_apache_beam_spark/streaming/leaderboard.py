@@ -20,11 +20,23 @@ Beam semantics → Structured Streaming mapping (SURVEY.md §4.3):
   ``lastProgress`` watermark + a compact first-emission marker table
   (``streaming/timing.py``).
 
-State backend: at the 100 TB design point configure RocksDB
-(``spark.sql.streaming.stateStore.providerClass``) — per-key-per-window
-state lives in executor state stores keyed by (team, window), exactly
-Beam's windowed GroupByKey state, and is GC'd when the watermark passes
-window end + lateness (SURVEY.md §3.3).
+State backend: the default HDFS-backed state store, with **one** state
+partition per query (``start_leaderboard(state_partitions=1)``). Team
+state is per (team, window), exactly Beam's windowed GroupByKey state,
+and is GC'd when the watermark passes window end + lateness (SURVEY.md
+§3.3); user state is one row per user. The keys are few (15-odd live
+teams with at most 3 open windows each, a few hundred users), while each
+state partition costs a fixed amount every micro-batch, no-data
+watermark batches included: one state task, and four checkpoint files
+(delta, checksum, and a Hadoop ``.crc`` sidecar for each), each of which
+forks ``/bin/chmod`` when ``libhadoop`` is absent. One partition per
+core (``spark.sql.shuffle.partitions``) would multiply that cost for no
+parallelism the keys could use. Pass a larger ``state_partitions`` when
+the key domain outgrows one task. RocksDB
+(``spark.sql.streaming.stateStore.providerClass``) with changelog
+checkpointing was measured at this size, one partition each, and used
+as much CPU per micro-batch with a larger live heap; it is the backend
+for a state that no longer fits the executor heap.
 """
 
 from __future__ import annotations
@@ -124,7 +136,7 @@ def start_leaderboard(
     user_trigger: str | None = TEN_MINUTES,
     table_prefix: str = "leaderboard",
     format: str = "text",
-    state_partitions: int | None = None,
+    state_partitions: int = 1,
 ):
     """Run both LeaderBoard queries over one shared parsed stream
     (LeaderBoard.java:144-171: one source, two sinks). Returns the two
@@ -134,15 +146,16 @@ def start_leaderboard(
     ``foreachBatch``; the team sink adds ``processing_time`` and the pane
     ``timing`` column (P4/W8) through the timing annotator.
 
-    ``state_partitions`` overrides ``spark.sql.shuffle.partitions`` for
-    the duration of query START only (the partition count is baked into
-    each query's checkpoint at start; the session value is restored
-    immediately after). Streaming state tasks cost a fixed per-partition
-    overhead every micro-batch — including the empty watermark-advance
-    batch — so size this to the KEY cardinality, not the cluster: a
-    leaderboard keyed by teams/users wants far fewer state partitions
-    than a 100 TB batch shuffle. Leave ``None`` to inherit the session
-    setting.
+    ``state_partitions`` (default 1) is each query's state-partition
+    count. It is set as ``spark.sql.shuffle.partitions`` for query START
+    only, then the session value is restored. The count is baked into the
+    checkpoint's offset log at first start, so a restart on an existing
+    checkpoint keeps the old count whatever is passed. Every state
+    partition costs one task and four checkpoint files per micro-batch,
+    the no-data watermark batches included (see "State backend" above),
+    so pass a larger value only when the key domain outgrows one task:
+    when a partition's per-batch work, not its fixed cost, bounds the
+    micro-batch.
     """
     from .timing import TimingAnnotator
 
@@ -183,13 +196,8 @@ def start_leaderboard(
     if annotator is not None:
         annotator.attach(spark, "leaderboard_team")
 
-    prior_shuffle = (
-        spark.conf.get("spark.sql.shuffle.partitions")
-        if state_partitions is not None
-        else None
-    )
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
+    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
     try:
         team_writer = (
             team.writeStream.outputMode("update")
@@ -211,8 +219,7 @@ def start_leaderboard(
             user_writer = user_writer.trigger(processingTime=user_trigger)
         user_q = user_writer.start()
     finally:
-        if prior_shuffle is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
+        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
     return team_q, user_q
 
 

@@ -318,40 +318,61 @@ def test_checkpoint_restart_resumes_state(spark, stream_dirs):
     assert state2 == {("u1",): 12}
 
 
-def test_start_leaderboard_end_to_end(spark, tmp_path):
-    """Full two-sink LeaderBoard with pane-timing annotation (W8/K4)."""
+def _state_partition_count(checkpoint: str) -> int:
+    """Numeric partition directories of a query's operator-0 state."""
+    return len([d for d in os.listdir(f"{checkpoint}/state/0") if d.isdigit()])
+
+
+def _run_three_file_leaderboard(spark, root, **kwargs):
+    """Run the LeaderBoard over three files, one drain each. The second
+    file moves the watermark 10 hours on; the third refines the first
+    window, now past the 120-minute lateness horizon (the team board drops
+    it, the global-window user board keeps it), and opens a new window.
+    Returns the team board's (window_start, team, total_score, timing)
+    rows and the user board's (user, total_score) rows, sorted. Boards
+    and checkpoints are under ``root``/out and ``root``/chk."""
     from demo_apache_beam_spark.streaming.leaderboard import start_leaderboard
 
-    in_dir, out_dir, chk = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "chk")
+    in_dir, out_dir, chk = f"{root}/in", f"{root}/out", f"{root}/chk"
     hours = 10 * 3600 * 1000
-    _write_lines(in_dir, "a.txt", [
-        _line("u1", "team_a", 5, BASE_MS),
-        _line("u2", "team_b", 9, BASE_MS + 120_000),
-    ])
+    files = [
+        [_line("u1", "team_a", 5, BASE_MS), _line("u2", "team_b", 9, BASE_MS + 120_000)],
+        [_line("u1", "team_a", 7, BASE_MS + hours)],
+        [_line("u9", "team_a", 2, BASE_MS + 60_000),
+         _line("u1", "team_a", 4, BASE_MS + hours + 60_000)],
+    ]
+    _write_lines(in_dir, "a.txt", files[0])
     team_q, user_q = start_leaderboard(
-        spark, in_dir, out_dir, chk, team_trigger=None, user_trigger=None,
+        spark, in_dir, out_dir, chk, team_trigger=None, user_trigger=None, **kwargs
     )
-    team_q.processAllAvailable(); user_q.processAllAvailable()
+    try:
+        team_q.processAllAvailable(); user_q.processAllAvailable()
+        for name, lines in zip(("b.txt", "c.txt"), files[1:]):
+            _write_lines(in_dir, name, lines)
+            team_q.processAllAvailable(); user_q.processAllAvailable()
+    finally:
+        team_q.stop(); user_q.stop()
 
-    # Batch 2 advances the watermark past the first window; batch 3 then
-    # refines a closed window (LATE) and opens a new one (EARLY).
-    _write_lines(in_dir, "b.txt", [_line("u1", "team_a", 7, BASE_MS + hours)])
-    team_q.processAllAvailable(); user_q.processAllAvailable()
-    _write_lines(in_dir, "c.txt", [
-        _line("u9", "team_a", 2, BASE_MS + 60_000),       # refine closed window
-        _line("u1", "team_a", 4, BASE_MS + hours + 60_000),
-    ])
-    team_q.processAllAvailable(); user_q.processAllAvailable()
-    team_q.stop(); user_q.stop()
+    team = sorted(
+        tuple(r) for r in spark.read.parquet(f"{out_dir}/leaderboard_team")
+        .select("window_start", "team", "total_score", "timing").collect()
+    )
+    user = sorted(
+        tuple(r) for r in spark.read.parquet(f"{out_dir}/leaderboard_user")
+        .select("user", "total_score").collect()
+    )
+    return team, user
 
-    team_out = spark.read.parquet(f"{out_dir}/leaderboard_team")
-    user_out = spark.read.parquet(f"{out_dir}/leaderboard_user")
+
+def test_start_leaderboard_end_to_end(spark, tmp_path):
+    """Full two-sink LeaderBoard with pane-timing annotation (W8/K4)."""
+    team, user = _run_three_file_leaderboard(spark, str(tmp_path))
+
+    team_out = spark.read.parquet(f"{tmp_path}/out/leaderboard_team")
     assert {"window_start", "window_end", "team", "total_score", "processing_time", "timing"} <= set(team_out.columns)
-    timings = {r["timing"] for r in team_out.select("timing").distinct().collect()}
-    assert "EARLY" in timings  # batch-1 emissions precede any watermark
+    assert "EARLY" in {t for *_, t in team}  # batch-1 emissions precede any watermark
     # final accumulated user totals present in the append log
-    users = {(r["user"], r["total_score"]) for r in user_out.collect()}
-    assert ("u1", 16) in users, users
+    assert ("u1", 16) in user, user
 
 
 def test_streaming_near_dedup_equals_batch_increments(spark, tmp_path):
@@ -475,38 +496,75 @@ def test_near_dedup_replay_epoch_is_idempotent(spark, tmp_path):
 
 
 def test_start_leaderboard_state_partitions_override(spark, tmp_path):
-    """state_partitions bakes a smaller state-partition count into the
-    query checkpoints (a per-micro-batch task-overhead knob) without
-    changing results, and the session's shuffle setting is restored."""
+    """One state partition per query by default; ``state_partitions``
+    bakes another count into the query checkpoints. Both give the same
+    boards (the too-late refinement and the new window included), and the
+    session's shuffle setting is restored after each start."""
+    prior = spark.conf.get("spark.sql.shuffle.partitions")
+    boards = {}
+    for label, kwargs, want in (("default", {}, 1), ("four", {"state_partitions": 4}, 4)):
+        root = str(tmp_path / label)
+        team, user = _run_three_file_leaderboard(spark, root, **kwargs)
+        assert spark.conf.get("spark.sql.shuffle.partitions") == prior
+        chk = f"{root}/chk"
+        assert _state_partition_count(f"{chk}/team") == want
+        assert _state_partition_count(f"{chk}/user") == want
+        boards[label] = (team, user)
+
+    assert boards["default"] == boards["four"]
+    team, user = boards["default"]
+    assert [(w.hour, t, n, timing) for w, t, n, timing in team] == [
+        (22, "team_a", 5, "EARLY"),
+        (22, "team_b", 9, "EARLY"),
+        (8, "team_a", 7, "EARLY"),
+        (8, "team_a", 11, "EARLY"),
+    ], team
+    assert user == [("u1", 5), ("u1", 12), ("u1", 16), ("u2", 9), ("u9", 2)], user
+
+
+def test_start_leaderboard_restart_keeps_checkpoint_partitions(spark, tmp_path):
+    """A checkpoint made with 4 state partitions restarts under the
+    1-partition default: Spark takes the count from the checkpoint's
+    offset log, and the totals after the restart build on the state from
+    before it (no reset, no re-read of the drained file)."""
     from demo_apache_beam_spark.streaming.leaderboard import start_leaderboard
 
-    prior = spark.conf.get("spark.sql.shuffle.partitions")
     in_dir, out_dir, chk = (
         str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "chk")
     )
+
+    def drain(**kwargs):
+        team_q, user_q = start_leaderboard(
+            spark, in_dir, out_dir, chk, team_trigger=None, user_trigger=None,
+            **kwargs,
+        )
+        try:
+            team_q.processAllAvailable(); user_q.processAllAvailable()
+        finally:
+            team_q.stop(); user_q.stop()
+
     _write_lines(in_dir, "a.txt", [
         _line("u1", "team_a", 5, BASE_MS),
         _line("u2", "team_b", 9, BASE_MS + 120_000),
-        _line("u1", "team_a", 3, BASE_MS + 180_000),
     ])
-    team_q, user_q = start_leaderboard(
-        spark, in_dir, out_dir, chk, team_trigger=None, user_trigger=None,
-        state_partitions=4,
+    drain(state_partitions=4)
+    _write_lines(in_dir, "b.txt", [_line("u1", "team_a", 7, BASE_MS + 60_000)])
+    drain()
+
+    for query in ("team", "user"):
+        assert _state_partition_count(f"{chk}/{query}") == 4, query
+    team = sorted(
+        (r["team"], r["total_score"])
+        for r in spark.read.parquet(f"{out_dir}/leaderboard_team").collect()
     )
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prior
-    team_q.processAllAvailable(); user_q.processAllAvailable()
-    team_q.stop(); user_q.stop()
-
-    users = {
-        (r["user"], r["total_score"])
-        for r in spark.read.parquet(f"{out_dir}/leaderboard_user").collect()
-    }
-    assert ("u1", 8) in users and ("u2", 9) in users
-    # the override reached the state layout: 4 state-store dirs per query
-    import os
-
-    state_dirs = os.listdir(f"{chk}/user/state/0")
-    assert len([d for d in state_dirs if d.isdigit()]) == 4
+    user = sorted(
+        tuple(r) for r in spark.read.parquet(f"{out_dir}/leaderboard_user")
+        .select("user", "total_score").collect()
+    )
+    # 12 = 5 before the restart + 7 after; a reset would read 7, a re-read
+    # of a.txt 17 (and a second u2 row)
+    assert team == [("team_a", 5), ("team_a", 12), ("team_b", 9)], team
+    assert user == [("u1", 5), ("u1", 12), ("u2", 9)], user
 
 
 def test_streaming_dedup_equals_batch(spark, stream_dirs):
