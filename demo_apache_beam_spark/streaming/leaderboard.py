@@ -14,7 +14,8 @@ Beam semantics → Structured Streaming mapping (SURVEY.md §4.3):
   watermark horizon are dropped and their window state evicted.
 - Global-window user totals with the 10-min repeated trigger
   (LeaderBoard.java:211-220) → unwindowed ``groupBy(user)`` in update mode
-  with ``trigger(processingTime=...)``.
+  with ``trigger(processingTime=...)``, and no watermark: a global window
+  never closes, so nothing is ever late for it.
 - Pane timing (EARLY/ON_TIME/LATE, LeaderBoard.java:101-104) — no Spark
   built-in; annotated in the sink from the query's synchronous
   ``lastProgress`` watermark + a compact first-emission marker table
@@ -26,22 +27,29 @@ state is per (team, window), exactly Beam's windowed GroupByKey state,
 and is GC'd when the watermark passes window end + lateness (SURVEY.md
 §3.3); user state is one row per user. The keys are few (15-odd live
 teams with at most 3 open windows each, a few hundred users), while each
-state partition costs a fixed amount every micro-batch, no-data
-watermark batches included: one state task, and four checkpoint files
-(delta, checksum, and a Hadoop ``.crc`` sidecar for each), each of which
-forks ``/bin/chmod`` when ``libhadoop`` is absent. One partition per
-core (``spark.sql.shuffle.partitions``) would multiply that cost for no
-parallelism the keys could use. Pass a larger ``state_partitions`` when
-the key domain outgrows one task. RocksDB
-(``spark.sql.streaming.stateStore.providerClass``) with changelog
-checkpointing was measured at this size, one partition each, and used
-as much CPU per micro-batch with a larger live heap; it is the backend
-for a state that no longer fits the executor heap.
+state partition costs a fixed amount every micro-batch: one state task,
+and four checkpoint files (delta, checksum, and a Hadoop ``.crc``
+sidecar for each), each of which forks ``/bin/chmod`` when ``libhadoop``
+is absent. One partition per core (``spark.sql.shuffle.partitions``)
+would multiply that cost for no parallelism the keys could use. Pass a
+larger ``state_partitions`` when the key domain outgrows one task.
+RocksDB (``spark.sql.streaming.stateStore.providerClass``) with
+changelog checkpointing was measured at this size, one partition each,
+and used as much CPU per micro-batch with a larger live heap; it is the
+backend for a state that no longer fits the executor heap.
+
+Micro-batches: a file that moves event time on costs three. The team
+query runs its data batch, then a no-data batch in which the advanced
+watermark evicts closed windows; that batch emits no rows in update
+mode, so its sink only drives the plan through a ``noop`` write (the
+state store still evicts and commits) and writes no board file. The
+user query runs one batch: without a watermark it has no state to
+evict, so Spark schedules no no-data batch for it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.parse import parse_game_events
@@ -102,9 +110,7 @@ def calculate_team_scores(
     )
 
 
-def calculate_user_scores(
-    events: DataFrame, allowed_lateness_minutes: int = 120
-) -> DataFrame:
+def calculate_user_scores(events: DataFrame) -> DataFrame:
     """A4 ``CalculateUserScores`` (LeaderBoard.java:202-221): global-window
     running user totals — one state row per user (W3 GlobalWindows).
 
@@ -112,16 +118,29 @@ def calculate_user_scores(
     key, Spark applies **no** late-row dropping or state eviction here —
     arbitrarily late rows still accumulate. That matches Beam's
     GlobalWindows (a global window never closes; LeaderBoard.java:213
-    relies on the repeated trigger, not window expiry). The
-    ``allowed_lateness_minutes`` watermark is declared only so the
-    engine reports a watermark for this query's progress metrics; it
-    does not gate the aggregate.
+    relies on the repeated trigger, not window expiry). So no watermark
+    is declared: it would not gate the aggregate, and only make Spark run
+    a no-data batch after every data batch. The query reports no
+    watermark either (``stream_health(user_q).watermark_ms`` is None).
     """
-    return (
-        events.withWatermark("event_time", f"{int(allowed_lateness_minutes)} minutes")
-        .groupBy("user")
-        .agg(F.sum("score").cast("long").alias("total_score"))
-    )
+    return events.groupBy("user").agg(F.sum("score").cast("long").alias("total_score"))
+
+
+def drain_no_data_batch(batch_df: DataFrame) -> None:
+    """Execute a no-data micro-batch's plan with a ``noop`` write, so the
+    state store still evicts and commits, without writing a board.
+
+    An update-mode aggregate emits no rows in a no-data batch. The write
+    counts them anyway and raises if there are any, so a batch taken for
+    a no-data one by mistake fails the query instead of losing its rows.
+    """
+    rows = Observation()
+    batch_df.observe(rows, F.count(F.lit(1)).alias("n")).write.format("noop").mode(
+        "overwrite"
+    ).save()
+    n = rows.get["n"]
+    if n:
+        raise RuntimeError(f"no-data micro-batch emitted {n} rows")
 
 
 def start_leaderboard(
@@ -152,17 +171,18 @@ def start_leaderboard(
     checkpoint's offset log at first start, so a restart on an existing
     checkpoint keeps the old count whatever is passed. Every state
     partition costs one task and four checkpoint files per micro-batch,
-    the no-data watermark batches included (see "State backend" above),
-    so pass a larger value only when the key domain outgrows one task:
-    when a partition's per-batch work, not its fixed cost, bounds the
-    micro-batch.
+    the team query's no-data batches included (see "State backend"
+    above), so pass a larger value only when the key domain outgrows one
+    task: when a partition's per-batch work, not its fixed cost, bounds
+    the micro-batch.
     """
-    from .timing import TimingAnnotator
+    from .timing import TimingAnnotator, active_query
 
     events = read_game_event_lines(spark, input_dir, format=format)
 
     team = calculate_team_scores(events, team_window_minutes, allowed_lateness_minutes)
-    user = calculate_user_scores(events, allowed_lateness_minutes)
+    user = calculate_user_scores(events)
+    team_query = "leaderboard_team"
 
     annotator = (
         TimingAnnotator(
@@ -174,19 +194,21 @@ def start_leaderboard(
     )
 
     def team_sink(batch_df: DataFrame, epoch_id: int) -> None:
+        # resolved through ``spark``: batch_df's cloned session lists no
+        # active queries
+        q = active_query(spark, team_query)
+        if q is not None and not q.status["isDataAvailable"]:
+            drain_no_data_batch(batch_df)
+            return
         out = batch_df.withColumn("processing_time", F.current_timestamp())
         if annotator is None:
             out.write.mode("append").parquet(f"{output_dir}/{table_prefix}_team")
             return
-        # persist so the annotated plan (markers broadcast join + the
-        # upstream state-store read) executes once, not once for the data
-        # write and again for the marker extraction
-        out = annotator.annotate(out).persist()
-        try:
-            out.write.mode("append").parquet(f"{output_dir}/{table_prefix}_team")
-            annotator.record(out, epoch_id)
-        finally:
-            out.unpersist()
+        # the ON_TIME panes are observed on the one board write, so the
+        # annotated plan executes once with no persist and no second job
+        out, on_time = annotator.observe_on_time(annotator.annotate(out))
+        out.write.mode("append").parquet(f"{output_dir}/{table_prefix}_team")
+        annotator.record(on_time.get["panes"])
 
     def user_sink(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.withColumn("processing_time", F.current_timestamp()).write.mode(
@@ -194,7 +216,7 @@ def start_leaderboard(
         ).parquet(f"{output_dir}/{table_prefix}_user")
 
     if annotator is not None:
-        annotator.attach(spark, "leaderboard_team")
+        annotator.attach(spark, team_query)
 
     prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(int(state_partitions)))
@@ -203,7 +225,7 @@ def start_leaderboard(
             team.writeStream.outputMode("update")
             .foreachBatch(team_sink)
             .option("checkpointLocation", f"{checkpoint_dir}/team")
-            .queryName("leaderboard_team")
+            .queryName(team_query)
         )
         if team_trigger:
             team_writer = team_writer.trigger(processingTime=team_trigger)

@@ -33,7 +33,7 @@ LATE pane             later emissions, until state eviction
 drop after lateness   eviction at ``spark_wm ≥ end``
 ====================  =========================================
 
-Two design points, both scale-critical:
+Three design points, all scale-critical:
 
 - **Watermark is read synchronously** from the query's ``lastProgress``
   inside ``foreachBatch``. The progress published at the end of batch
@@ -41,6 +41,13 @@ Two design points, both scale-critical:
   state, so the classification matches what the state store did — an
   async listener (the round-1 design) could lag a batch and mislabel
   panes.
+- **``record`` rides the sink write.** ``observe_on_time`` attaches an
+  ``Observation`` of ``collect_set(struct(team, window_end))`` over the
+  batch's ON_TIME rows, so the set of panes that just fired arrives with
+  the board's one parquet write. ``record`` only files that set: it runs
+  no Spark job of its own, and the annotated plan (the markers broadcast
+  join and the upstream state-store read) executes once without a
+  ``persist()``.
 - **First-emission markers live in their own compact table** (sibling
   ``<sink>_markers`` path), not in the ever-growing data sink. Each
   batch appends only the (key, window_end) pairs that just fired
@@ -60,7 +67,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -72,14 +79,27 @@ _MARKER_SCHEMA = T.StructType(
 )
 
 
+def active_query(spark: SparkSession, name: str):
+    """The active StreamingQuery called ``name``, or None.
+
+    Pass the session the query was started on, NOT a micro-batch
+    DataFrame's session: ``foreachBatch`` hands its batch a cloned
+    session whose StreamingQueryManager lists no active queries.
+    """
+    for q in spark.streams.active:
+        if q.name == name:
+            return q
+    return None
+
+
 class TimingAnnotator:
     """Adds a ``timing`` column to windowed sink batches.
 
     Usage inside ``foreachBatch``::
 
-        out = annotator.annotate(batch_df)
+        out, on_time = annotator.observe_on_time(annotator.annotate(batch_df))
         out.write.mode("append").parquet(sink)
-        annotator.record(out, epoch_id)
+        annotator.record(on_time.get["panes"])
     """
 
     def __init__(
@@ -93,6 +113,7 @@ class TimingAnnotator:
         self._compact_every = int(compact_every)
         self._query_name: str | None = None
         self._spark: SparkSession | None = None
+        self._recorded = 0  # record() calls, the compaction clock
         # driver-side mirror of the marker table: (team, window_end) pairs.
         # None = not yet hydrated (first batch after start/restart reads
         # the durable table once); afterwards the hot path is memory-only.
@@ -102,29 +123,22 @@ class TimingAnnotator:
         self._spark = spark
         self._query_name = query_name
 
-    def detach(self, spark: SparkSession | None = None) -> None:
-        self._query_name = None
-
     # -- watermark ---------------------------------------------------------
 
     def _current_watermark(self, spark: SparkSession) -> str | None:
         """The previous batch's published watermark — the exact value the
         engine used to gate this batch's state updates.
 
-        The lookup runs against the session ``attach()`` captured, NOT the
-        micro-batch DataFrame's session: ``foreachBatch`` hands its batch a
-        cloned session whose StreamingQueryManager lists no active queries,
-        so resolving through it silently yields None (= everything EARLY).
+        The lookup runs against the session ``attach()`` captured (see
+        ``active_query``): resolving through the micro-batch's cloned
+        session would silently yield None (= everything EARLY).
         """
-        spark = self._spark or spark
         if self._query_name is None:
             return None
-        for q in spark.streams.active:
-            if q.name == self._query_name:
-                progress = q.lastProgress
-                if progress:
-                    return (progress.get("eventTime") or {}).get("watermark")
-                return None
+        q = active_query(self._spark or spark, self._query_name)
+        progress = q.lastProgress if q is not None else None
+        if progress:
+            return (progress.get("eventTime") or {}).get("watermark")
         return None
 
     # -- markers -----------------------------------------------------------
@@ -200,8 +214,26 @@ class TimingAnnotator:
             .otherwise(F.lit("LATE")),
         ).drop("_seen")
 
-    def record(self, annotated_df: DataFrame, epoch_id: int) -> None:
-        """Record this batch's first ON_TIME firings: update the driver
+    @staticmethod
+    def observe_on_time(annotated_df: DataFrame) -> tuple[DataFrame, Observation]:
+        """Attach the observation of this batch's ON_TIME panes to an
+        annotated batch. After the batch's one write, ``.get["panes"]``
+        of the returned Observation holds the distinct (team, window_end)
+        rows labelled ON_TIME, the argument ``record`` takes."""
+        on_time = Observation()
+        observed = annotated_df.observe(
+            on_time,
+            F.collect_set(
+                F.when(
+                    F.col("timing") == "ON_TIME", F.struct("team", "window_end")
+                )
+            ).alias("panes"),
+        )
+        return observed, on_time
+
+    def record(self, panes) -> None:
+        """Record this batch's first ON_TIME firings, the (team,
+        window_end) rows ``observe_on_time`` collected: update the driver
         mirror and append to the durable marker table.
 
         Each (team, window_end) lands at most once across the stream's
@@ -209,23 +241,18 @@ class TimingAnnotator:
         the table grows by closed windows only; batches with no new
         ON_TIME firings — the overwhelming majority in steady state —
         write NOTHING (the pre-cache design paid an empty parquet append
-        per batch). Compaction keeps the file set bounded by the live
-        window count.
+        per batch). Every ``compact_every``-th call compacts, which keeps
+        the file set bounded by the live window count.
         """
-        spark = annotated_df.sparkSession
-        new_rows = (
-            annotated_df.filter(F.col("timing") == "ON_TIME")
-            .select("team", "window_end")
-            .distinct()
-            .collect()
-        )
-        if new_rows:
-            cache = self._hydrate_cache(spark)
-            cache.update((r["team"], r["window_end"]) for r in new_rows)
-            spark.createDataFrame(new_rows, _MARKER_SCHEMA).write.mode(
+        spark = self._spark or SparkSession.active()
+        fired = [tuple(p) for p in panes]
+        if fired:
+            self._hydrate_cache(spark).update(fired)
+            spark.createDataFrame(fired, _MARKER_SCHEMA).write.mode(
                 "append"
             ).parquet(self._markers_path)
-        if self._compact_every and (epoch_id + 1) % self._compact_every == 0:
+        self._recorded += 1
+        if self._compact_every and self._recorded % self._compact_every == 0:
             self._compact(spark)
 
     def _compact(self, spark: SparkSession) -> None:

@@ -323,32 +323,23 @@ def _state_partition_count(checkpoint: str) -> int:
     return len([d for d in os.listdir(f"{checkpoint}/state/0") if d.isdigit()])
 
 
-def _run_three_file_leaderboard(spark, root, **kwargs):
-    """Run the LeaderBoard over three files, one drain each. The second
-    file moves the watermark 10 hours on; the third refines the first
-    window, now past the 120-minute lateness horizon (the team board drops
-    it, the global-window user board keeps it), and opens a new window.
-    Returns the team board's (window_start, team, total_score, timing)
-    rows and the user board's (user, total_score) rows, sorted. Boards
-    and checkpoints are under ``root``/out and ``root``/chk."""
+def _run_leaderboard(spark, root, files, **kwargs):
+    """Run the LeaderBoard over ``files`` (lists of lines), one file and
+    one drain of both queries at a time. Returns the team board's
+    (window_start, team, total_score, timing) rows and the user board's
+    (user, total_score) rows, sorted. Boards and checkpoints are under
+    ``root``/out and ``root``/chk."""
     from demo_apache_beam_spark.streaming.leaderboard import start_leaderboard
 
     in_dir, out_dir, chk = f"{root}/in", f"{root}/out", f"{root}/chk"
-    hours = 10 * 3600 * 1000
-    files = [
-        [_line("u1", "team_a", 5, BASE_MS), _line("u2", "team_b", 9, BASE_MS + 120_000)],
-        [_line("u1", "team_a", 7, BASE_MS + hours)],
-        [_line("u9", "team_a", 2, BASE_MS + 60_000),
-         _line("u1", "team_a", 4, BASE_MS + hours + 60_000)],
-    ]
-    _write_lines(in_dir, "a.txt", files[0])
+    _write_lines(in_dir, "f0.txt", files[0])
     team_q, user_q = start_leaderboard(
         spark, in_dir, out_dir, chk, team_trigger=None, user_trigger=None, **kwargs
     )
     try:
         team_q.processAllAvailable(); user_q.processAllAvailable()
-        for name, lines in zip(("b.txt", "c.txt"), files[1:]):
-            _write_lines(in_dir, name, lines)
+        for i, lines in enumerate(files[1:], 1):
+            _write_lines(in_dir, f"f{i}.txt", lines)
             team_q.processAllAvailable(); user_q.processAllAvailable()
     finally:
         team_q.stop(); user_q.stop()
@@ -364,8 +355,36 @@ def _run_three_file_leaderboard(spark, root, **kwargs):
     return team, user
 
 
+def _run_three_file_leaderboard(spark, root, **kwargs):
+    """``_run_leaderboard`` over three files. The second file moves the
+    watermark 10 hours on; the third refines the first window, now past
+    the 120-minute lateness horizon (the team board drops it, the
+    global-window user board keeps it), and opens a new window."""
+    hours = 10 * 3600 * 1000
+    return _run_leaderboard(spark, root, [
+        [_line("u1", "team_a", 5, BASE_MS), _line("u2", "team_b", 9, BASE_MS + 120_000)],
+        [_line("u1", "team_a", 7, BASE_MS + hours)],
+        [_line("u9", "team_a", 2, BASE_MS + 60_000),
+         _line("u1", "team_a", 4, BASE_MS + hours + 60_000)],
+    ], **kwargs)
+
+
+def _batch_ids(log_dir: str) -> list[int]:
+    """Batch ids in a query's offsets/ or commits/ log."""
+    return sorted(int(f) for f in os.listdir(log_dir) if f.isdigit())
+
+
 def test_start_leaderboard_end_to_end(spark, tmp_path):
-    """Full two-sink LeaderBoard with pane-timing annotation (W8/K4)."""
+    """Full two-sink LeaderBoard with pane-timing annotation (W8/K4).
+
+    Watermark batches write nothing: the user query, which has no
+    watermark, runs one batch per file, no board holds an empty part file,
+    and the team query's no-data batch, driven through a ``noop`` write,
+    still commits the eviction of the 22:00 windows."""
+    import glob
+
+    import pyarrow.parquet as pq
+
     team, user = _run_three_file_leaderboard(spark, str(tmp_path))
 
     team_out = spark.read.parquet(f"{tmp_path}/out/leaderboard_team")
@@ -373,6 +392,60 @@ def test_start_leaderboard_end_to_end(spark, tmp_path):
     assert "EARLY" in {t for *_, t in team}  # batch-1 emissions precede any watermark
     # final accumulated user totals present in the append log
     assert ("u1", 16) in user, user
+
+    chk = f"{tmp_path}/chk"
+    assert _batch_ids(f"{chk}/user/commits") == [0, 1, 2]
+    parts = glob.glob(f"{tmp_path}/out/leaderboard_*/part-*.parquet")
+    assert parts
+    empty = [p for p in parts if pq.ParquetFile(p).metadata.num_rows == 0]
+    assert not empty, empty
+    # a no-data batch ran after the 10-hour jump and evicted the 22:00
+    # windows; only the 08:00 window is left in the committed state
+    assert len(_batch_ids(f"{chk}/team/commits")) > 3
+    state = spark.read.format("statestore").load(f"{chk}/team")
+    windows = sorted(
+        (r["key"]["window"]["start"].hour, r["key"]["team"]) for r in state.collect()
+    )
+    assert windows == [(8, "team_a")], windows
+
+
+def test_start_leaderboard_labels_late_pane(spark, tmp_path):
+    """One team window through the real sink: EARLY before the watermark
+    reaches its end, ON_TIME at the first emission after, LATE at the
+    next. The ON_TIME label must be recorded from the sink's write (the
+    ``_markers`` table holds that window), or the LATE emission would read
+    ON_TIME again."""
+    root = str(tmp_path)
+    hour = 3600 * 1000
+    w22_end_ms = (BASE_MS // hour) * hour + hour  # [22:00, 23:00)
+    team, _ = _run_leaderboard(spark, root, [
+        [_line("u1", "team_a", 5, BASE_MS)],
+        # max event 23:10: Beam's watermark passes 23:00, Spark's is 21:10
+        [_line("u2", "team_b", 9, w22_end_ms + 10 * 60_000)],
+        [_line("u3", "team_a", 2, BASE_MS + 7 * 60_000)],
+        [_line("u4", "team_a", 3, BASE_MS + 17 * 60_000)],
+    ])
+    assert [(w.hour, t, n, timing) for w, t, n, timing in team] == [
+        (22, "team_a", 5, "EARLY"),
+        (22, "team_a", 7, "ON_TIME"),
+        (22, "team_a", 10, "LATE"),
+        (23, "team_b", 9, "EARLY"),
+    ], team
+    markers = spark.read.parquet(f"{root}/out/leaderboard_team_markers").collect()
+    assert [(r["team"], r["window_end"].timestamp() * 1000) for r in markers] == [
+        ("team_a", float(w22_end_ms))
+    ], markers
+
+
+def test_drain_no_data_batch_raises_on_rows(spark):
+    """A batch taken for a no-data one must fail, not lose its rows."""
+    from demo_apache_beam_spark.streaming.leaderboard import drain_no_data_batch
+
+    drain_no_data_batch(spark.createDataFrame([], "team string, total_score long"))
+    with pytest.raises(RuntimeError, match="emitted 2 rows"):
+        drain_no_data_batch(
+            spark.createDataFrame([("a", 1), ("b", 2)], "team string, total_score long")
+        )
 
 
 def test_streaming_near_dedup_equals_batch_increments(spark, tmp_path):
@@ -678,7 +751,10 @@ def test_timing_annotator_compaction(spark, tmp_path):
     def team_sink(batch_df, epoch_id):
         out = annotator.annotate(batch_df).persist()
         out.write.mode("append").parquet(sink_path)
-        annotator.record(out, epoch_id)
+        annotator.record(
+            out.filter(F.col("timing") == "ON_TIME")
+            .select("team", "window_end").distinct().collect()
+        )
         out.unpersist()
 
     events = read_game_event_lines(spark, in_dir)
