@@ -17,6 +17,8 @@ Conventions (hash parity with the oracle):
 
 from __future__ import annotations
 
+import functools
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -29,6 +31,8 @@ from .operators.parse import events_to_game_lines, parse_game_events, with_corru
 from .operators.selection import is_eval_doc, is_eval_doc_sql
 from .operators.windows import with_event_time
 from .sources.tables import load_table, spread
+
+log = logging.getLogger(__name__)
 
 
 @dataclass(frozen=True)
@@ -914,30 +918,19 @@ def _neardup_pairs_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     listing, cluster assignment, best-of-cluster pick, leakage-safe
     split — previously re-ran shingling → signatures → banding →
     candidate self-join → Jaccard verify per query; at 100 TB that is N
-    full corpus shingle passes for N consumers. Same fingerprinted
-    bootstrap discipline as :func:`_knn_graph_store` (documents listing
-    + pipeline params key the store; regenerated testdata rebuilds;
-    unwritable warehouses fall back inline on the narrow store-error
-    set). The build is deterministic, so stored rows are bit-identical
-    to an inline run (pinned by pytest) and `dedup_minhash_portable`'s
-    DuckDB oracle — which replays the whole pipeline — now verifies the
-    STORE content hash-for-hash."""
-    try:
-        return _bootstrap_store(
-            spark,
-            "neardup_pairs",
-            sf_dir,
-            "documents",
-            f"minhash:portable:k={_MH_PORT_K}:bands={_MH_PORT_BANDS}:thr=0.5:v2",
-            lambda path, _t: _neardup_pairs_inline(spark, sf_dir)
-            .write.mode("overwrite")
-            .parquet(path),
-            lambda path, _t: spark.read.parquet(path).select(
-                "id_a", "id_b", "jaccard"
-            ),
-        )
-    except _store_errors():
-        return _neardup_pairs_inline(spark, sf_dir)
+    full corpus shingle passes for N consumers. A :func:`_stored`
+    store keyed on the documents listing and the package code. The
+    build is deterministic, so stored rows are bit-identical to an
+    inline run (pinned by pytest) and `dedup_minhash_portable`'s DuckDB
+    oracle — which replays the whole pipeline — verifies the STORE
+    content hash-for-hash."""
+    return _stored(
+        spark,
+        "neardup_pairs",
+        sf_dir,
+        "documents",
+        lambda: _neardup_pairs_inline(spark, sf_dir),
+    )
 
 
 def _neardup_clusters_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -949,26 +942,18 @@ def _neardup_clusters_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     closure, not the edges — one clustering pass serves all three. The
     build consumes :func:`_neardup_pairs_store`, so a cold bootstrap
     runs the corpus shingle pass exactly once for the whole family."""
-    def inline():
-        from .operators.graph import duplicate_clusters
+    from .operators.graph import duplicate_clusters
 
-        return duplicate_clusters(
+    return _stored(
+        spark,
+        "neardup_clusters",
+        sf_dir,
+        "documents",
+        lambda: duplicate_clusters(
             _neardup_pairs_store(spark, sf_dir).select("id_a", "id_b"),
             _neardup_corpus(spark, sf_dir).select("doc_id"),
-        )
-
-    try:
-        return _bootstrap_store(
-            spark,
-            "neardup_clusters",
-            sf_dir,
-            "documents",
-            f"minhash:portable:k={_MH_PORT_K}:bands={_MH_PORT_BANDS}:thr=0.5:cc:v2",
-            lambda path, _t: inline().write.mode("overwrite").parquet(path),
-            lambda path, _t: spark.read.parquet(path).select("doc_id", "cluster_id"),
-        )
-    except _store_errors():
-        return inline()
+        ),
+    )
 
 
 # Portable pair pipeline + transitive closure → per-doc cluster ids,
@@ -1031,37 +1016,18 @@ def _simhash_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     r12 and dropped from 11.0 to ~5 s, while this family kept
     re-tokenizing + re-hashing + re-voting the corpus per call at
     4.65 s; the probe join only ever needs the 8-byte fingerprints).
-    Same fingerprinted ``_bootstrap_store`` contract: keyed on the
-    documents listing + hash family + corpus params, so a regenerated
-    corpus or changed family rebuilds; signatures are deterministic
-    (xxhash64 votes), so stored rows are bit-identical to an inline
-    run. Falls back inline (localCheckpointed) on the narrow
-    store-error set."""
-    from .operators.checkpoints import tracked_local_checkpoint
+    A :func:`_stored` store keyed on the documents listing and the
+    package code; signatures are deterministic (xxhash64 votes), so
+    stored rows are bit-identical to an inline run."""
     from .operators.dedup import simhash_signatures
 
-    def build(path, _table):
-        simhash_signatures(
-            _neardup_corpus(spark, sf_dir), portable=False
-        ).write.mode("overwrite").parquet(path)
-
-    def load(path, _table):
-        return spark.read.parquet(path)
-
-    try:
-        return _bootstrap_store(
-            spark,
-            "simhash_sigs",
-            sf_dir,
-            "documents",
-            "simhash:family=xxhash64:corpus=neardup%11:v1",
-            build,
-            load,
-        )
-    except _store_errors():
-        return tracked_local_checkpoint(
-            simhash_signatures(_neardup_corpus(spark, sf_dir), portable=False)
-        )
+    return _stored(
+        spark,
+        "simhash_sigs",
+        sf_dir,
+        "documents",
+        lambda: simhash_signatures(_neardup_corpus(spark, sf_dir), portable=False),
+    )
 
 
 @register(
@@ -1133,39 +1099,21 @@ def _simhash_portable_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-tokenized + re-md5'd + re-voted the whole corpus on every call;
     the probe join only ever needs the 8-byte fingerprints). Mirrors
     the ``_audio_fp_store`` / ``_image_dhash_store`` template: the
-    ``(doc_id, simhash)`` rows go behind the fingerprinted
-    :func:`_bootstrap_store`, keyed on the documents listing + the hash
-    family/corpus params, so a regenerated corpus or changed family
-    rebuilds. Signatures are fully deterministic (md5 bit votes), so
-    stored rows are bit-identical to an inline run — the DuckDB oracle
-    still recomputes them from text, which is exactly what makes the
-    store safe: a stale or corrupted store hash-mismatches. Falls back
-    inline (localCheckpointed) on the narrow store-error set."""
-    from .operators.checkpoints import tracked_local_checkpoint
+    ``(doc_id, simhash)`` rows go behind :func:`_stored`, keyed on the
+    documents listing and the package code. Signatures are fully
+    deterministic (md5 bit votes), so stored rows are bit-identical to
+    an inline run — the DuckDB oracle still recomputes them from text,
+    which is exactly what makes the store safe: a stale or corrupted
+    store hash-mismatches."""
     from .operators.dedup import simhash_signatures
 
-    def build(path, _table):
-        simhash_signatures(
-            _neardup_corpus(spark, sf_dir), portable=True
-        ).write.mode("overwrite").parquet(path)
-
-    def load(path, _table):
-        return spark.read.parquet(path)
-
-    try:
-        return _bootstrap_store(
-            spark,
-            "simhash_portable_sigs",
-            sf_dir,
-            "documents",
-            "simhash:family=md5:corpus=neardup%11:v1",
-            build,
-            load,
-        )
-    except _store_errors():
-        return tracked_local_checkpoint(
-            simhash_signatures(_neardup_corpus(spark, sf_dir), portable=True)
-        )
+    return _stored(
+        spark,
+        "simhash_portable_sigs",
+        sf_dir,
+        "documents",
+        lambda: simhash_signatures(_neardup_corpus(spark, sf_dir), portable=True),
+    )
 
 
 @register(
@@ -3837,28 +3785,21 @@ def _series_profiles_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 7): both series-similarity queries previously recomputed the
     events groupBy + Arrow scatter per query (each behind its own
     localCheckpoint); the same fingerprinted bootstrap that de-duplicated
-    the kNN/LSH/near-dup builds applies — the profile pass runs once per
-    events generation, consumers read 168-double rows from parquet.
-    Falls back to the inline build (localCheckpointed, since the ANN
-    consumer reads its corpus three times) on the narrow store-error
-    set. Profile values are IEEE partial-sum aggregates whose shuffle
-    merge order Spark does not pin, so store≡inline is asserted to
-    1e-12 in pytest (not bitwise); both consumers round to 6 dp, far
-    above any such wobble, so their oracles/overlap pins are unaffected."""
-    try:
-        return _bootstrap_store(
-            spark,
-            "series_profiles",
-            sf_dir,
-            "events",
-            "series_profiles:buckets=168:centered:v1",
-            lambda path, _t: _user_series_profiles(spark, sf_dir)
-            .write.mode("overwrite")
-            .parquet(path),
-            lambda path, _t: spark.read.parquet(path).select("user_id", "series"),
-        )
-    except _store_errors():
-        return _user_series_profiles(spark, sf_dir).localCheckpoint()
+    the kNN/LSH/near-dup builds applies (:func:`_stored`) — the profile
+    pass runs once per events generation, consumers read 168-double
+    rows from parquet. The inline fallback is staged too, since the ANN
+    consumer reads its corpus three times. Profile values are IEEE
+    partial-sum aggregates whose shuffle merge order Spark does not
+    pin, so store≡inline is asserted to 1e-12 in pytest (not bitwise);
+    both consumers round to 6 dp, far above any such wobble, so their
+    oracles/overlap pins are unaffected."""
+    return _stored(
+        spark,
+        "series_profiles",
+        sf_dir,
+        "events",
+        lambda: _user_series_profiles(spark, sf_dir),
+    )
 
 
 # distinct event users per scale factor (TESTDATA.md) — sizes the series
@@ -4622,38 +4563,19 @@ def _image_dhash_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     (VERDICT r9 item 6): ``media_image_near_dup`` re-encoded + decoded
     its whole PNG corpus inside the query on every call; with a second
     image consumer now live (the streaming near-dedup history), the
-    ``(media_id, dhash)`` rows go behind the same fingerprinted
-    :func:`_bootstrap_store` discipline as every other shared artifact —
-    keyed on the documents listing + hash params, so a regenerated
-    corpus or changed variant/hash parameters rebuild. The pipeline is
-    fully deterministic (area pooling + gradient signs over decoded
-    pixels), so stored rows are bit-identical to an inline run (pinned
-    by pytest). Falls back inline (localCheckpointed — one decode pass,
-    the r9 review contract) on the narrow store-error set."""
-    from .operators.checkpoints import tracked_local_checkpoint
-
-    def build(path, _table):
-        _image_dhash_sigs_inline(spark, sf_dir).write.mode(
-            "overwrite"
-        ).parquet(path)
-
-    def load(path, _table):
-        return spark.read.parquet(path)
-
-    try:
-        return _bootstrap_store(
-            spark,
-            "image_dhash",
-            sf_dir,
-            "documents",
-            "dhash:hash_size=8:variants=b5@1e9,u7@2e9:v1",
-            build,
-            load,
-        )
-    except _store_errors():
-        return tracked_local_checkpoint(
-            _image_dhash_sigs_inline(spark, sf_dir)
-        )
+    ``(media_id, dhash)`` rows go behind the same :func:`_stored`
+    store as every other shared artifact — keyed on the documents
+    listing and the package code. The pipeline is fully deterministic
+    (area pooling + gradient signs over decoded pixels), so stored rows
+    are bit-identical to an inline run (pinned by pytest). The inline
+    fallback is staged — one decode pass, the r9 review contract."""
+    return _stored(
+        spark,
+        "image_dhash",
+        sf_dir,
+        "documents",
+        lambda: _image_dhash_sigs_inline(spark, sf_dir),
+    )
 
 
 @register(
@@ -4680,7 +4602,7 @@ def _image_dhash_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(hamming_near_pairs) — sub-quadratic by construction, no "
         "all-pairs join (plan-pinned in pytest). The signatures come "
         "from the shared fingerprinted dHash store (_image_dhash_store, "
-        "keyed on the documents listing + hash/variant params, "
+        "keyed on the documents listing + package code, "
         "bit-identical to an inline run by pytest), so the PNG "
         "encode+decode pipeline runs once per corpus generation and "
         "the query itself is join-only over 8-byte rows. Output "
@@ -4727,7 +4649,7 @@ def media_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pytest. Pairs via hamming_near_pairs — sub-quadratic, no "
         "all-pairs join (plan-pinned). The signatures come from the "
         "shared fingerprinted store (_audio_fp_store, keyed on the "
-        "documents listing + frame/band/variant params, bit-identical "
+        "documents listing + package code, bit-identical "
         "to an inline run by pytest), so the WAV encode+decode+FFT "
         "pipeline runs once per corpus generation and the query itself "
         "is join-only over 8-byte rows. Output (id_a, id_b, hamming).",
@@ -4824,39 +4746,20 @@ def _audio_fp_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     on every call (4.5 s cold / 1.85 s steady, SURVEY §6); with a
     second audio-fingerprint computer live (the streaming perceptual
     ingest), the ``(media_id, afp)`` rows go behind the same
-    fingerprinted :func:`_bootstrap_store` discipline as the image
-    family's ``_image_dhash_store`` (its own r10 template: 1.21 → 0.80 s
-    warm) — keyed on the documents listing + frame/band/variant params,
-    so a regenerated corpus or changed parameters rebuild. The pipeline
-    is fully deterministic (fixed start-anchored frames, rfft power
-    spectra, equal-width band energies, gradient signs), so stored rows
-    are bit-identical to an inline run (pinned by pytest). Falls back
-    inline (localCheckpointed — one decode pass, the r9 review
-    contract) on the narrow store-error set."""
-    from .operators.checkpoints import tracked_local_checkpoint
-
-    def build(path, _table):
-        _audio_fp_sigs_inline(spark, sf_dir).write.mode(
-            "overwrite"
-        ).parquet(path)
-
-    def load(path, _table):
-        return spark.read.parquet(path)
-
-    try:
-        return _bootstrap_store(
-            spark,
-            "audio_fp",
-            sf_dir,
-            "documents",
-            "afp:frames=9x512:bands=8:variants=g5@1e9,p7@2e9:v1",
-            build,
-            load,
-        )
-    except _store_errors():
-        return tracked_local_checkpoint(
-            _audio_fp_sigs_inline(spark, sf_dir)
-        )
+    :func:`_stored` store as the image family's ``_image_dhash_store``
+    (its own r10 template: 1.21 → 0.80 s warm) — keyed on the documents
+    listing and the package code. The pipeline is fully deterministic
+    (fixed start-anchored frames, rfft power spectra, equal-width band
+    energies, gradient signs), so stored rows are bit-identical to an
+    inline run (pinned by pytest). The inline fallback is staged — one
+    decode pass, the r9 review contract."""
+    return _stored(
+        spark,
+        "audio_fp",
+        sf_dir,
+        "documents",
+        lambda: _audio_fp_sigs_inline(spark, sf_dir),
+    )
 
 
 @register(
@@ -6232,69 +6135,103 @@ def _store_errors():
     return (OSError, AnalysisException, Py4JError)
 
 
-def _source_fingerprint(spark: SparkSession, sf_dir: str, table: str, extra: str) -> str:
-    """Content fingerprint of a source table + build params: md5 over the
-    sorted (file name, size, mtime) listing of ``{sf_dir}/{table}.parquet``
-    plus the params string. Regenerated testdata or changed build params
-    change the fingerprint, forcing a store rebuild — existence probes
+def _store_path(name: str, sf_dir: str) -> str:
+    """Absolute path of store ``name`` for the scale factor at ``sf_dir``:
+    ``{name}_{tag}`` under ``$SPARK_GRAFT_STORE_DIR`` (default
+    ``./spark-warehouse``), the tag being ``sf_dir``'s base name with every
+    character outside ``[A-Za-z0-9_]`` replaced by ``_`` (``sf0_01``)."""
+    import os
+    import re
+
+    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
+    root = os.environ.get("SPARK_GRAFT_STORE_DIR", "spark-warehouse")
+    return os.path.abspath(os.path.join(root, f"{name}_{tag}"))
+
+
+@functools.cache
+def _code_hash() -> str:
+    """md5 over every ``.py`` file of this package (relative path and
+    bytes, in path order), computed once per process: the code term of
+    every store fingerprint, so a store never serves rows built by code
+    that has since changed."""
+    import hashlib
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent
+    h = hashlib.md5()
+    for f in sorted(pkg.rglob("*.py")):
+        h.update(f.relative_to(pkg).as_posix().encode() + b"\0")
+        h.update(f.read_bytes() + b"\0")
+    return h.hexdigest()
+
+
+def _source_fingerprint(
+    spark: SparkSession, sf_dir: str, tables: tuple[str, ...], extra: str
+) -> str:
+    """Freshness key of a store: md5 over the sorted (file name, size,
+    mtime) listing of each ``{sf_dir}/{table}.parquet`` in ``tables``,
+    the package code hash (:func:`_code_hash`) and ``extra``. Regenerated
+    testdata or any edit to the package changes it — existence probes
     alone would silently serve stale artifacts."""
     import hashlib
 
     jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{table}.parquet")
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-    entries = []
-    it = fs.listFiles(p, True)
-    while it.hasNext():
-        st = it.next()
-        entries.append(
-            f"{st.getPath().getName()}:{st.getLen()}:{st.getModificationTime()}"
-        )
+    conf = spark._jsc.hadoopConfiguration()
+    parts = []
+    for table in tables:
+        p = jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{table}.parquet")
+        it = p.getFileSystem(conf).listFiles(p, True)
+        entries = []
+        while it.hasNext():
+            st = it.next()
+            entries.append(
+                f"{st.getPath().getName()}:{st.getLen()}:{st.getModificationTime()}"
+            )
+        parts.append(f"{table}=" + "|".join(sorted(entries)))
     return hashlib.md5(
-        ("|".join(sorted(entries)) + "||" + extra).encode()
+        "||".join([*parts, _code_hash(), extra]).encode()
     ).hexdigest()
 
 
 def _bootstrap_store(spark: SparkSession, name: str, sf_dir: str,
-                     source_table: str, params_desc: str, build, load,
+                     source_table, params_desc: str, build, load, *,
                      success_probes: tuple[str, ...] = ("",)):
-    """Shared store-bootstrap shape for the persisted shared artifacts
-    (exact/ANN kNN graph, LSH signature table): key by scale tag under
-    the warehouse dir ($SPARK_GRAFT_STORE_DIR overrides; default
-    ./spark-warehouse), probe a one-row ``{path}_meta`` parquet holding
-    the SOURCE FINGERPRINT (file listing + build params — see
-    :func:`_source_fingerprint`), rebuild on missing/mismatched meta,
-    and hand the path to ``load``. Raises the store-unavailable set
-    (:func:`_store_errors`) for the caller's fallback; other exceptions
-    propagate. Hardening (review r7): freshness requires the DATA
-    directory's ``_SUCCESS`` too, not just the meta — a deleted store
-    under a surviving sidecar rebuilds instead of permanently falling
-    back; an unwritable warehouse fails a tiny FS create-probe BEFORE
-    any build work runs (no doomed full build per call); and a
-    per-session memo skips the meta-read job when the recomputed
-    fingerprint matches the one already served. Concurrency: two
-    processes bootstrapping the same key race last-writer-wins on the
-    overwrite (both write identical bytes — builds are deterministic);
-    a reader overlapping the overwrite window surfaces a store error
-    and takes the caller's inline fallback rather than wrong data.
-    ``success_probes`` names the store's dataset roots RELATIVE to the
-    store path (default ``("",)`` — the store is one dataset at the
-    path itself); a multi-dataset store (the k-means split layout's
-    ``assignment`` + ``centroids`` dirs) lists each so the freshness
-    check requires EVERY half's ``_SUCCESS`` — probing only a top-level
-    marker would let an out-of-band deletion of one half serve a
-    poisoned or permanently-fallback store (the r9 sidecar-deletion
-    class, generalized)."""
-    import os
-    import re
+    """Open store ``name`` for ``sf_dir`` — building it first unless it
+    is fresh — and return ``load(path, table)``. This is the one place
+    that decides store freshness.
 
+    The store lives at :func:`_store_path` with a one-row
+    ``{path}_meta`` parquet beside it holding the fingerprint it was
+    built under (:func:`_source_fingerprint`): the file listing of every
+    source table (``source_table`` is one name or a tuple of names), one
+    hash of the package's own ``.py`` sources, and ``params_desc``.
+    Every build parameter is a code constant, so callers pass ``""``,
+    and any edit to the package rebuilds every store once on its next
+    read: a store never serves output computed by older code.
+
+    The store is fresh when the meta holds the current fingerprint and
+    every dataset root named in ``success_probes`` (relative to the
+    path; the default ``("",)`` is the path itself; a multi-dataset
+    store lists each half) has its ``_SUCCESS``, so a store deleted
+    out-of-band under a surviving meta rebuilds instead of failing.
+    Before a build, :func:`_clear_store` fails fast on an unwritable
+    root and deletes the store path, so no build lays its files over a
+    partial or older one. A per-session memo skips the meta-read job
+    while the fingerprint matches the one already served and the
+    ``_SUCCESS`` markers still exist.
+
+    Decisions are logged: a rebuild at INFO with its reason, a memo or
+    meta hit at DEBUG. The store-unavailable set (:func:`_store_errors`)
+    is logged at WARNING with the exception class and re-raised for the
+    caller's inline fallback; other exceptions propagate. Two processes
+    building the same key race last-writer-wins (builds are
+    deterministic); a reader overlapping a rebuild hits a store error
+    and falls back inline rather than reading wrong rows."""
     from .operators.dedup import _hadoop_path_exists
 
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    root = os.environ.get("SPARK_GRAFT_STORE_DIR", "spark-warehouse")
-    path = os.path.abspath(os.path.join(root, f"{name}_{tag}"))
-    table = f"{name}_{tag}"
-    fp = _source_fingerprint(spark, sf_dir, source_table, params_desc)
+    path = _store_path(name, sf_dir)
+    table = path.rsplit("/", 1)[-1]
+    tables = (source_table,) if isinstance(source_table, str) else tuple(source_table)
 
     def _all_success() -> bool:
         return all(
@@ -6304,38 +6241,48 @@ def _bootstrap_store(spark: SparkSession, name: str, sf_dir: str,
             for p in success_probes
         )
 
-    memo_key = (id(spark), path)
-    cached = _STORE_MEMO.get(memo_key)
-    if cached is not None and cached[0] == fp and _all_success():
-        # the _SUCCESS probe (one FS call per dataset root, like the
-        # source listing above) keeps a long-lived session from serving
-        # plans over a store deleted out-of-band — it falls through and
-        # self-heals instead
-        return cached[1]
-    _STORE_MEMO.pop(memo_key, None)
+    try:
+        fp = _source_fingerprint(spark, sf_dir, tables, params_desc)
+        memo_key = (id(spark), path)
+        cached = _STORE_MEMO.get(memo_key)
+        if cached is not None and cached[0] == fp and _all_success():
+            log.debug("store %s: memo hit", name)
+            return cached[1]
+        _STORE_MEMO.pop(memo_key, None)
 
-    meta_path = f"{path}_meta"
-    fresh = False
-    if _hadoop_path_exists(spark, meta_path) and _all_success():
-        try:
-            row = spark.read.parquet(meta_path).collect()
-            fresh = bool(row) and row[0]["fingerprint"] == fp
-        except _store_errors():
-            fresh = False
-    if not fresh:
-        _probe_writable(spark, path)  # raises OSError before any build work
-        build(path, table)
-        spark.createDataFrame([(fp,)], "fingerprint string").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(meta_path)
-        # purge the session-shared file-listing cache for every dataset
-        # root: an out-of-band delete + rebuild reuses the same
-        # directory, and a stale cached listing would hand new reads the
-        # OLD part files
-        for p in success_probes:
-            spark.catalog.refreshByPath(f"{path}/{p}" if p else path)
-        spark.catalog.refreshByPath(meta_path)
-    out = load(path, table)
+        meta_path = f"{path}_meta"
+        if not _hadoop_path_exists(spark, meta_path):
+            stale = "no meta"
+        elif not _all_success():
+            stale = "lost _SUCCESS"
+        else:
+            try:
+                row = spark.read.parquet(meta_path).collect()
+                fresh = bool(row) and row[0]["fingerprint"] == fp
+            except _store_errors():  # an unreadable meta counts as a mismatch
+                fresh = False
+            stale = None if fresh else "fingerprint mismatch"
+        if stale is None:
+            log.debug("store %s: meta hit", name)
+        else:
+            _clear_store(spark, path)  # raises OSError before any build work
+            log.info("store %s: rebuilding (%s)", name, stale)
+            build(path, table)
+            spark.createDataFrame([(fp,)], "fingerprint string").coalesce(
+                1
+            ).write.mode("overwrite").parquet(meta_path)
+            # purge the session-shared file-listing cache for every
+            # dataset root: a rebuild reuses the same directory, and a
+            # stale cached listing would hand new reads the OLD part files
+            for p in success_probes:
+                spark.catalog.refreshByPath(f"{path}/{p}" if p else path)
+            spark.catalog.refreshByPath(meta_path)
+        out = load(path, table)
+    except _store_errors() as e:
+        log.warning(
+            "store %s unavailable (%s): computing inline", name, type(e).__name__
+        )
+        raise
     _STORE_MEMO[memo_key] = (fp, out)
     return out
 
@@ -6348,18 +6295,45 @@ def _bootstrap_store(spark: SparkSession, name: str, sf_dir: str,
 _STORE_MEMO: dict = {}
 
 
-def _probe_writable(spark: SparkSession, path: str) -> None:
-    """Create-and-delete a sentinel under the store root; raises OSError
-    when the warehouse is unwritable, so callers fall back BEFORE paying
-    a full build whose write is doomed."""
+def _clear_store(spark: SparkSession, path: str) -> None:
+    """Make ``path`` an empty place to build in: create and delete a
+    sentinel beside it, so an unwritable store root raises OSError
+    before any build work (no doomed full build per call), then delete
+    whatever an earlier build left at ``path`` — a partial build, an
+    older layout — so no build appends to or mixes with it."""
     try:
         jvm = spark._jvm
         p = jvm.org.apache.hadoop.fs.Path(f"{path}__probe")
         fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
         fs.create(p, True).close()
         fs.delete(p, False)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(path), True)
     except Exception as e:  # any JVM-side failure = unwritable
         raise OSError(f"store root not writable: {path}") from e
+
+
+def _stored(spark: SparkSession, name: str, sf_dir: str, source_tables,
+            inline: Callable[[], DataFrame]) -> DataFrame:
+    """A single-DataFrame store: write ``inline()`` as parquet store
+    ``name`` (fresh per :func:`_bootstrap_store`) and read it back. On
+    the store-unavailable set, return ``inline()`` staged once instead,
+    so the fallback, like the store, materializes the rows once for
+    every consumer that reads them. Builds are deterministic, so the
+    stored rows equal an inline run."""
+    from .operators.checkpoints import tracked_local_checkpoint
+
+    try:
+        return _bootstrap_store(
+            spark,
+            name,
+            sf_dir,
+            source_tables,
+            "",
+            lambda path, _t: inline().write.mode("overwrite").parquet(path),
+            lambda path, _t: spark.read.parquet(path),
+        )
+    except _store_errors():
+        return tracked_local_checkpoint(inline())
 
 
 def _knn_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6373,26 +6347,11 @@ def _knn_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequential IEEE fold and ties break on neighbor id — so the stored
     rows are bit-identical to an inline build (pinned by pytest) and
     every consumer's oracle, which recomputes the graph in SQL, still
-    hash-matches. The store key fingerprints the embeddings files and
-    the build params, so regenerated testdata rebuilds instead of
-    serving stale edges; unwritable warehouses fall back to the inline
-    build (narrow store-error set only — real bugs propagate)."""
-    try:
-        return _bootstrap_store(
-            spark,
-            "knn_graph",
-            sf_dir,
-            "embeddings",
-            "knn_graph:k=5:dim=64:v1",
-            lambda path, _t: knn_graph(spark, sf_dir)
-            .write.mode("overwrite")
-            .parquet(path),
-            lambda path, _t: spark.read.parquet(path).select(
-                "src_id", "rank", "dst_id", "cosine"
-            ),
-        )
-    except _store_errors():
-        return knn_graph(spark, sf_dir)
+    hash-matches. Keyed on the embeddings files and the package code
+    (:func:`_stored`)."""
+    return _stored(
+        spark, "knn_graph", sf_dir, "embeddings", lambda: knn_graph(spark, sf_dir)
+    )
 
 
 def _lsh_sig_store(spark: SparkSession, sf_dir: str):
@@ -6401,9 +6360,9 @@ def _lsh_sig_store(spark: SparkSession, sf_dir: str):
     use — so the graph is bit-identical — write bucketed+sorted by
     (_tbl, _sig), and every later analytics run self-joins the store
     exchange-free instead of re-signing the corpus. Same
-    fingerprinted-bootstrap discipline as :func:`_knn_graph_store`
-    (regenerated embeddings or changed index params rebuild the store).
-    Raises the store-unavailable set for the caller's inline fallback."""
+    fingerprinted bootstrap as :func:`_knn_graph_store` (regenerated
+    embeddings or a package edit rebuild the store). Raises the
+    store-unavailable set for the caller's inline fallback."""
     from .operators.similarity import lsh_build, lsh_load_bucketed, lsh_save_bucketed
 
     def build(path, table):
@@ -6422,7 +6381,7 @@ def _lsh_sig_store(spark: SparkSession, sf_dir: str):
         "lsh_index",
         sf_dir,
         "embeddings",
-        "lsh:tables=16:dim=64:seed=42:buckets=32:v1",
+        "",
         build,
         lambda path, table: lsh_load_bucketed(spark, path, table),
     )
@@ -6464,25 +6423,12 @@ def _ann_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     (from the persisted signature store), while downstream analytics
     read the edge list from this store instead of re-running the
     candidate self-join + refinement per query. Same fingerprinted
-    bootstrap (embeddings listing + index/graph params); deterministic
-    build (fixed seed, exact-cosine refinement, id tie-breaks) makes
-    the stored rows identical to an inline build."""
-    try:
-        return _bootstrap_store(
-            spark,
-            "ann_graph",
-            sf_dir,
-            "embeddings",
-            "ann:lsh:tables=16:dim=64:seed=42:k=5:v1",
-            lambda path, _t: knn_graph_lsh(spark, sf_dir)
-            .write.mode("overwrite")
-            .parquet(path),
-            lambda path, _t: spark.read.parquet(path).select(
-                "src_id", "rank", "dst_id", "cosine"
-            ),
-        )
-    except _store_errors():
-        return knn_graph_lsh(spark, sf_dir)
+    store (:func:`_stored`, keyed on the embeddings listing); the
+    deterministic build (fixed seed, exact-cosine refinement, id
+    tie-breaks) makes the stored rows identical to an inline build."""
+    return _stored(
+        spark, "ann_graph", sf_dir, "embeddings", lambda: knn_graph_lsh(spark, sf_dir)
+    )
 
 
 
@@ -10433,66 +10379,49 @@ def _kmeans_store(spark: SparkSession, sf_dir: str):
     bit-identical to an inline run (pinned by pytest) and every
     consumer's replay oracle still hash-matches. Returns ``(assignment
     DataFrame, centroid list)``; raises the store-unavailable set for
-    the caller's inline fallback."""
-    from .operators.similarity import (
-        VECTORIZED_ASSIGN_MIN_K,
-        distributed_kmeans,
-        read_kmeans_store,
-        write_kmeans_store,
-    )
-
-    def build(path, _table):
-        # clean slate: a pre-split-layout store (r9's single dataset)
-        # left part files directly under `path`; the subdir writes
-        # would not clear them and a raw read of `path` would see a
-        # layout mix — delete the root before laying down the split
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
-        assigned, cents = distributed_kmeans(
-            load_table(spark, sf_dir, "embeddings"), k=8, iters=2
-        )
-        write_kmeans_store(
-            spark, path, assigned.select("vec_id", "cluster", "dist"), cents
-        )
+    the caller's inline fallback. The assign-kernel dispatch threshold
+    (``VECTORIZED_ASSIGN_MIN_K``) pins which kernel, and so which bits
+    on exact-tie rows, a build stores; it is code, so moving it rebuilds
+    the store like any other package edit."""
+    from .operators.similarity import read_kmeans_store, write_kmeans_store
 
     def load(path, _table):
         adf, cents = read_kmeans_store(spark, path)
         return adf.select("vec_id", "cluster", "dist"), cents
 
-    # the assign-kernel dispatch threshold is part of the fingerprint:
-    # the two kernels can differ on exact-tie rows, so which kernel a
-    # given (k, threshold) resolves to pins the stored bits (VERDICT r9
-    # item 3) — k=8 resolves to the literal kernel today, and moving
-    # the threshold below 8 would correctly force a rebuild
     return _bootstrap_store(
         spark,
         "kmeans_assign",
         sf_dir,
         "embeddings",
-        f"kmeans:k=8:iters=2:seed=ordered:v4:layout=split"
-        f":assign_dispatch=auto@{VECTORIZED_ASSIGN_MIN_K}",
-        build,
+        "",
+        lambda path, _t: write_kmeans_store(
+            spark, path, *_kmeans_inline(spark, sf_dir)
+        ),
         load,
         success_probes=("assignment", "centroids"),
     )
+
+
+def _kmeans_inline(spark: SparkSession, sf_dir: str):
+    """The (assignment, centroids) pair computed inline: Lloyd k=8 over
+    two assignment passes on ``sf_dir``'s embeddings."""
+    from .operators.similarity import distributed_kmeans
+
+    assigned, cents = distributed_kmeans(
+        load_table(spark, sf_dir, "embeddings"), k=8, iters=2
+    )
+    return assigned.select("vec_id", "cluster", "dist"), cents
 
 
 def _kmeans_assignment(spark: SparkSession, sf_dir: str):
     """Store-first access to the (assignment, centroids) pair with the
     inline fallback every store consumer carries (read-only checkout /
     unwritable warehouse — narrow store-error set only)."""
-    from .operators.similarity import distributed_kmeans
-
     try:
         return _kmeans_store(spark, sf_dir)
     except _store_errors():
-        assigned, cents = distributed_kmeans(
-            load_table(spark, sf_dir, "embeddings"), k=8, iters=2
-        )
-        return assigned.select("vec_id", "cluster", "dist"), cents
+        return _kmeans_inline(spark, sf_dir)
 
 
 @register(
@@ -10516,7 +10445,7 @@ def _kmeans_assignment(spark: SparkSession, sf_dir: str):
         "floats; no engine materializes N·k scored rows (the oracle's "
         "cross join is the replay, not the plan). The assignment comes "
         "from the PERSISTED kmeans store (_kmeans_store — fingerprinted "
-        "on the embeddings listing + k/iters params, bit-identical to "
+        "on the embeddings listing + package code, bit-identical to "
         "an inline Lloyd run by pytest), so the clustering family "
         "trains ONCE per corpus generation instead of once per "
         "consumer; the oracle replays the whole run and verifies the "
@@ -11370,8 +11299,7 @@ def _ivm_store(spark: SparkSession, sf_dir: str):
     a crash between the join append and the aggregate append is now a
     detected half-applied increment, ADVICE r11). Behind the
     fingerprinted store discipline; the fingerprint covers BOTH source
-    tables (lineitem's listing folds into the params string). Returns
-    ``{"view": df, "agg": df}``."""
+    tables. Returns ``{"view": df, "agg": df}``."""
     from .operators.ivm import (
         apply_join_increment,
         read_aggregate_view,
@@ -11379,11 +11307,6 @@ def _ivm_store(spark: SparkSession, sf_dir: str):
     )
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)  # appends on a partial old build would poison
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("okey"), "o_orderpriority"
         )
@@ -11412,9 +11335,8 @@ def _ivm_store(spark: SparkSession, sf_dir: str):
         spark,
         "ivm_orders_lineitem",
         sf_dir,
-        "orders",
-        "ivm:v3:bucketed+agg-in-marker:inc=o%5/li%3:li="
-        + _source_fingerprint(spark, sf_dir, "lineitem", ""),
+        ("orders", "lineitem"),
+        "",
         build,
         load,
         success_probes=("left", "right", "view", "agg"),
@@ -11551,11 +11473,6 @@ def _ivm_left_store(spark: SparkSession, sf_dir: str):
     from .operators.ivm import apply_left_join_increment, read_left_join_view
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
         o, li = _ivm_left_sources(spark, sf_dir)
         splits = [
             (o.filter(F.col("okey") % 5 < 4), li.filter(F.col("okey") % 3 < 2)),
@@ -11571,9 +11488,8 @@ def _ivm_left_store(spark: SparkSession, sf_dir: str):
         spark,
         "ivm_left_orders_lineitem",
         sf_dir,
-        "orders",
-        "ivm_left:v1:right=F:inc=o%5/li%3:li="
-        + _source_fingerprint(spark, sf_dir, "lineitem", ""),
+        ("orders", "lineitem"),
+        "",
         build,
         load,
         success_probes=(
@@ -11668,11 +11584,6 @@ def _ivm_left_streamed_store(spark: SparkSession, sf_dir: str):
     from .streaming.ivm import make_left_ivm_ingest
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
         o, li = _ivm_left_sources(spark, sf_dir)
         cell: dict = {}
         ingest = make_left_ivm_ingest(
@@ -11698,9 +11609,8 @@ def _ivm_left_streamed_store(spark: SparkSession, sf_dir: str):
         spark,
         "ivm_left_stream_orders_lineitem",
         sf_dir,
-        "orders",
-        "ivm_left_stream:v1:right=F:inc=o%3/li%3+1:replay=1:li="
-        + _source_fingerprint(spark, sf_dir, "lineitem", ""),
+        ("orders", "lineitem"),
+        "",
         build,
         load,
         success_probes=(
@@ -11791,11 +11701,6 @@ def _ivm_daily_store(spark: SparkSession, sf_dir: str):
     from .operators.ivm import apply_join_increment, read_join_view
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
         l, r = _ivm_daily_sources(spark, sf_dir)
         d = F.col("day")
         la, lb = (
@@ -11824,7 +11729,7 @@ def _ivm_daily_store(spark: SparkSession, sf_dir: str):
         "ivm_daily_events",
         sf_dir,
         "events",
-        "ivm_daily:v2:day=date_trunc:prune=day:inc=l@12/22,r@8/17",
+        "",
         build,
         load,
         success_probes=("left", "right", "view"),
@@ -11907,11 +11812,6 @@ def _ivm_delete_store(spark: SparkSession, sf_dir: str):
     )
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
         o = load_table(spark, sf_dir, "orders").select(
             F.col("o_orderkey").alias("okey"), "o_orderpriority"
         )
@@ -11962,9 +11862,8 @@ def _ivm_delete_store(spark: SparkSession, sf_dir: str):
         spark,
         "ivm_del_orders_lineitem",
         sf_dir,
-        "orders",
-        "ivm_del:v1:inc=o%5/li%3:del=okey%7,prio=1-URGENT:li="
-        + _source_fingerprint(spark, sf_dir, "lineitem", ""),
+        ("orders", "lineitem"),
+        "",
         build,
         load,
         success_probes=("left", "right", "view", "agg"),
@@ -12094,14 +11993,7 @@ def _ivm_catalog_path(sf_dir: str) -> str:
     store-BUILD time (``operators/catalog.py``); consumed by
     ``erase_rows_multi(store_catalog=)`` and enumerated by
     ``user_erasure_audit_views``."""
-    import os
-    import re
-
-    tag = re.sub(
-        r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir))
-    )
-    root = os.environ.get("SPARK_GRAFT_STORE_DIR", "spark-warehouse")
-    return os.path.abspath(os.path.join(root, f"ivm_catalog_{tag}"))
+    return _store_path("ivm_catalog", sf_dir)
 
 
 def _ivm3_store(spark: SparkSession, sf_dir: str):
@@ -12124,11 +12016,6 @@ def _ivm3_store(spark: SparkSession, sf_dir: str):
     from .operators.ivm import apply_join_increment, read_join_view
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
         c, o, li = _ivm3_sources(spark, sf_dir)
         splits = [
             (
@@ -12165,11 +12052,8 @@ def _ivm3_store(spark: SparkSession, sf_dir: str):
         spark,
         "ivm3_cust_orders_lineitem",
         sf_dir,
-        "orders",
-        "ivm3:v2:catalog:inc=c%2/o%5/li%3:c="
-        + _source_fingerprint(spark, sf_dir, "customer", "")
-        + ":li="
-        + _source_fingerprint(spark, sf_dir, "lineitem", ""),
+        ("customer", "orders", "lineitem"),
+        "",
         build,
         load,
         success_probes=(
@@ -12239,11 +12123,6 @@ def _ivm_streamed_store(spark: SparkSession, sf_dir: str):
     from .streaming.ivm import make_ivm_ingest
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
         ev = load_table(spark, sf_dir, "events").select(
             F.col("user_id").alias("uid"),
             F.date_trunc("day", "ts").alias("day"),
@@ -12274,7 +12153,7 @@ def _ivm_streamed_store(spark: SparkSession, sf_dir: str):
         "ivm_stream_events",
         sf_dir,
         "events",
-        "ivm_stream:v1:epochs=event_id%3:replay=1",
+        "",
         build,
         load,
         success_probes=("left", "right", "view"),
@@ -12369,11 +12248,6 @@ def _ivm_streamed_delete_store(spark: SparkSession, sf_dir: str):
     from .streaming.ivm import make_ivm_delete_ingest, make_ivm_ingest
 
     def build(path, _table):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-        if fs.exists(p):
-            fs.delete(p, True)
         ev = load_table(spark, sf_dir, "events").select(
             F.col("user_id").alias("uid"),
             F.date_trunc("day", "ts").alias("day"),
@@ -12416,7 +12290,7 @@ def _ivm_streamed_delete_store(spark: SparkSession, sf_dir: str):
         "ivm_stream_del_events",
         sf_dir,
         "events",
-        "ivm_stream_del:v1:epochs=i0,i1,d(uid%10=3),i2:replay=d2,i1:part=day",
+        "",
         build,
         load,
         success_probes=("left", "right", "view"),

@@ -1180,10 +1180,9 @@ def test_containment_prefix_path_matches_reference(spark):
 # ---------------------------------------------------------------------------
 
 def _store_paths(name):
-    import os
+    from demo_apache_beam_spark.queries import _store_path
 
-    root = os.environ.get("SPARK_GRAFT_STORE_DIR", "spark-warehouse")
-    data = os.path.abspath(os.path.join(root, f"{name}_sf0_001"))
+    data = _store_path(name, SF_SMALL)
     return data, data + "_meta"
 
 
@@ -1246,6 +1245,37 @@ def test_neardup_clusters_store_equals_inline(spark):
     assert any(r[0] != r[1] for r in got)
     warm = sorted(map(tuple, _neardup_clusters_store(spark, SF_SMALL).collect()))
     assert warm == expect
+
+
+def test_neardup_pairs_store_falls_back_and_reports(
+    spark, tmp_path, monkeypatch, caplog
+):
+    """An unwritable store root must not fail the query: the pair store
+    returns the inline rows and logs one WARNING naming the store and
+    the exception class. The root lies under a regular file, so
+    creating it fails whatever the user's permissions."""
+    import logging
+
+    from demo_apache_beam_spark.queries import (
+        _neardup_pairs_inline,
+        _neardup_pairs_store,
+    )
+
+    blocker = tmp_path / "a_file"
+    blocker.write_text("")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", str(blocker / "stores"))
+    inline = sorted(map(tuple, _neardup_pairs_inline(spark, SF_SMALL).collect()))
+    assert inline
+    logger = "demo_apache_beam_spark.queries"
+    with caplog.at_level(logging.DEBUG, logger=logger):
+        got = sorted(map(tuple, _neardup_pairs_store(spark, SF_SMALL).collect()))
+    assert got == inline
+    warned = [
+        r for r in caplog.records if r.name == logger and r.levelno == logging.WARNING
+    ]
+    assert len(warned) == 1
+    assert "neardup_pairs" in warned[0].getMessage()
+    assert "OSError" in warned[0].getMessage()
 
 
 def test_neardup_pairs_store_rebuilds_on_stale_fingerprint(spark):

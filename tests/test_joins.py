@@ -436,10 +436,10 @@ def test_knn_graph_store_equals_inline(spark):
     depends on it."""
     import shutil
 
-    from demo_apache_beam_spark.queries import _knn_graph_store, knn_graph
+    from demo_apache_beam_spark.queries import _knn_graph_store, _store_path, knn_graph
 
     sf = "/root/testdata/sf0.001"
-    shutil.rmtree("spark-warehouse/knn_graph_sf0_001", ignore_errors=True)
+    shutil.rmtree(_store_path("knn_graph", sf), ignore_errors=True)
     inline = sorted(map(tuple, knn_graph(spark, sf).collect()))
     stored = sorted(map(tuple, _knn_graph_store(spark, sf).collect()))
     assert inline == stored
@@ -452,16 +452,11 @@ def test_knn_graph_store_rebuilds_on_stale_fingerprint(spark):
     """A store whose meta fingerprint no longer matches the source
     listing + build params must REBUILD, not serve stale edges — the
     existence probe alone would (review r7)."""
-    from demo_apache_beam_spark.queries import _knn_graph_store
-
-    import os
+    from demo_apache_beam_spark.queries import _knn_graph_store, _store_path
 
     sf = "/root/testdata/sf0.001"
     _knn_graph_store(spark, sf).count()  # ensure bootstrapped
-    # derive the meta path the way _bootstrap_store does, so the test
-    # holds under $SPARK_GRAFT_STORE_DIR or a non-root cwd
-    root = os.environ.get("SPARK_GRAFT_STORE_DIR", "spark-warehouse")
-    meta = os.path.abspath(os.path.join(root, "knn_graph_sf0_001")) + "_meta"
+    meta = _store_path("knn_graph", sf) + "_meta"
     spark.createDataFrame([("stale",)], "fingerprint string").coalesce(
         1
     ).write.mode("overwrite").parquet(meta)
@@ -484,12 +479,15 @@ def test_knn_graph_store_self_heals_after_data_loss(spark):
     import os
     import shutil
 
-    from demo_apache_beam_spark.queries import _STORE_MEMO, _knn_graph_store
+    from demo_apache_beam_spark.queries import (
+        _STORE_MEMO,
+        _knn_graph_store,
+        _store_path,
+    )
 
     sf = "/root/testdata/sf0.001"
     _knn_graph_store(spark, sf).count()  # bootstrapped
-    root = os.environ.get("SPARK_GRAFT_STORE_DIR", "spark-warehouse")
-    data = os.path.abspath(os.path.join(root, "knn_graph_sf0_001"))
+    data = _store_path("knn_graph", sf)
     assert os.path.isdir(data) and os.path.isdir(data + "_meta")
     shutil.rmtree(data)  # lose the data, keep the sidecar
     _STORE_MEMO.clear()  # fresh-session view
@@ -508,17 +506,42 @@ def test_knn_graph_store_self_heals_with_warm_memo(spark):
     import os
     import shutil
 
-    from demo_apache_beam_spark.queries import _knn_graph_store, knn_graph
+    from demo_apache_beam_spark.queries import _knn_graph_store, _store_path, knn_graph
 
     sf = "/root/testdata/sf0.001"
     expected = sorted(map(tuple, knn_graph(spark, sf).collect()))
     _knn_graph_store(spark, sf).count()  # bootstrapped; memo now warm
-    root = os.environ.get("SPARK_GRAFT_STORE_DIR", "spark-warehouse")
-    data = os.path.abspath(os.path.join(root, "knn_graph_sf0_001"))
+    data = _store_path("knn_graph", sf)
     shutil.rmtree(data)  # NO memo clear — the live session must recover
     rows = sorted(map(tuple, _knn_graph_store(spark, sf).collect()))
     assert rows == expected
     assert os.path.isdir(data)  # rebuilt through the memo fall-through
+
+
+def test_knn_graph_store_rebuilds_after_code_change(spark, monkeypatch):
+    """A store built by older code must rebuild, not be served: the
+    fingerprint carries one hash of the package's code. Build under a
+    stand-in code hash, overwrite the data with wrong rows (what a
+    broken build would have stored) and keep its meta; back on the real
+    code hash, in a fresh-session view, the store must serve the inline
+    rows and carry a new fingerprint."""
+    import demo_apache_beam_spark.queries as q
+
+    sf = "/root/testdata/sf0.001"
+    data = q._store_path("knn_graph", sf)
+    expected = sorted(map(tuple, q.knn_graph(spark, sf).collect()))
+    monkeypatch.setattr(q, "_code_hash", lambda: "older code")
+    q._STORE_MEMO.clear()
+    q._knn_graph_store(spark, sf).count()  # built (or rebuilt) by "older code"
+    old_fp = spark.read.parquet(data + "_meta").collect()[0]["fingerprint"]
+    q.knn_graph(spark, sf).withColumn("cosine", F.lit(-1.0)).write.mode(
+        "overwrite"
+    ).parquet(data)
+    monkeypatch.undo()
+    q._STORE_MEMO.clear()
+    rows = sorted(map(tuple, q._knn_graph_store(spark, sf).collect()))
+    assert rows == expected
+    assert spark.read.parquet(data + "_meta").collect()[0]["fingerprint"] != old_fp
 
 
 def test_lsh_bucketed_store_graph_equals_inline(spark, tmp_path):
