@@ -11285,6 +11285,19 @@ def _ivm_merge_aggs():
     ]
 
 
+def _ivm_sources(spark: SparkSession, sf_dir: str):
+    """orders and lineitem projected onto the inner view's columns, keyed
+    on ``okey``: the sides of the inner and delete stores' increments and
+    of their consumers' inline fallbacks."""
+    o = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("okey"), "o_orderpriority"
+    )
+    li = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("okey"), "l_linestatus", "l_extendedprice"
+    )
+    return o, li
+
+
 def _ivm_store(spark: SparkSession, sf_dir: str):
     """The materialized orders⋈lineitem view, built INCREMENTALLY: two
     append-only increments through the delta-join algebra
@@ -11307,12 +11320,7 @@ def _ivm_store(spark: SparkSession, sf_dir: str):
     )
 
     def build(path, _table):
-        o = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("okey"), "o_orderpriority"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("okey"), "l_linestatus", "l_extendedprice"
-        )
+        o, li = _ivm_sources(spark, sf_dir)
         splits = [
             (o.filter(F.col("okey") % 5 < 4), li.filter(F.col("okey") % 3 < 2)),
             (o.filter(F.col("okey") % 5 >= 4), li.filter(F.col("okey") % 3 >= 2)),
@@ -11383,12 +11391,7 @@ def orders_lineitem_ivm_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         view = _ivm_store(spark, sf_dir)["view"]
     except _store_errors():
-        o = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("okey"), "o_orderpriority"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("okey"), "l_linestatus", "l_extendedprice"
-        )
+        o, li = _ivm_sources(spark, sf_dir)
         view = o.join(li, "okey")
     return view.groupBy("o_orderpriority", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -11433,12 +11436,7 @@ def orders_lineitem_ivm_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         return _ivm_store(spark, sf_dir)["agg"]
     except _store_errors():
-        o = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("okey"), "o_orderpriority"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("okey"), "l_linestatus", "l_extendedprice"
-        )
+        o, li = _ivm_sources(spark, sf_dir)
         return o.join(li, "okey").groupBy(*_IVM_GROUP).agg(
             F.count(F.lit(1)).alias("n_rows"),
             stable_sum("l_extendedprice", "revenue"),
@@ -11812,12 +11810,7 @@ def _ivm_delete_store(spark: SparkSession, sf_dir: str):
     )
 
     def build(path, _table):
-        o = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("okey"), "o_orderpriority"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("okey"), "l_linestatus", "l_extendedprice"
-        )
+        o, li = _ivm_sources(spark, sf_dir)
         splits = [
             (o.filter(F.col("okey") % 5 < 4), li.filter(F.col("okey") % 3 < 2)),
             (o.filter(F.col("okey") % 5 >= 4), li.filter(F.col("okey") % 3 >= 2)),
@@ -11890,14 +11883,11 @@ _IVM_DELETE_ORACLE = """
 def _ivm_delete_fallback_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inline recompute of the delete store's view (store-unavailable
     fallback): the join over the post-delete sources."""
-    o = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("okey"), "o_orderpriority"
-    ).filter(
+    o, li = _ivm_sources(spark, sf_dir)
+    o = o.filter(
         (F.col("okey") % 7 != 0) & (F.col("o_orderpriority") != "1-URGENT")
     )
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_orderkey").alias("okey"), "l_linestatus", "l_extendedprice"
-    ).filter(F.col("okey") % 7 != 0)
+    li = li.filter(F.col("okey") % 7 != 0)
     return o.join(li, "okey")
 
 
@@ -12109,6 +12099,32 @@ def orders_lineitem_customer_ivm(
     )
 
 
+def _ivm_events_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events projected onto the streamed views' columns, keyed on
+    ``(uid, day)``; ``event_id`` picks each row's epoch (mod 3)."""
+    return load_table(spark, sf_dir, "events").select(
+        F.col("user_id").alias("uid"),
+        F.date_trunc("day", "ts").alias("day"),
+        "event_type",
+        "value",
+        "event_id",
+    )
+
+
+def _ivm_events_profile(ev: DataFrame, *by) -> DataFrame:
+    """Per-(uid, day) event count ``rn`` of ``ev``, also grouped by
+    ``by``: an epoch's right delta in the streamed views."""
+    return ev.groupBy("uid", "day", *by).agg(F.count(F.lit(1)).alias("rn"))
+
+
+def _ivm_events_recompute(ev: DataFrame) -> DataFrame:
+    """A streamed view recomputed in one pass over surviving rows of
+    :func:`_ivm_events_source`: each fact joined with the profile of
+    every epoch, which is what the applied epochs accumulate."""
+    r = _ivm_events_profile(ev, (F.col("event_id") % 3).alias("_ep"))
+    return ev.drop("event_id").join(r.drop("_ep"), ["uid", "day"])
+
+
 def _ivm_streamed_store(spark: SparkSession, sf_dir: str):
     """The STREAM-maintained events⋈per-epoch-profile view: three
     deterministic micro-batch epochs (event_id mod 3) drive the
@@ -12123,20 +12139,12 @@ def _ivm_streamed_store(spark: SparkSession, sf_dir: str):
     from .streaming.ivm import make_ivm_ingest
 
     def build(path, _table):
-        ev = load_table(spark, sf_dir, "events").select(
-            F.col("user_id").alias("uid"),
-            F.date_trunc("day", "ts").alias("day"),
-            "event_type",
-            "value",
-            "event_id",
-        )
+        ev = _ivm_events_source(spark, sf_dir)
         ingest = make_ivm_ingest(
             spark,
             path,
             on=["uid", "day"],
-            right_deltas=lambda b: b.groupBy("uid", "day").agg(
-                F.count(F.lit(1)).alias("rn")
-            ),
+            right_deltas=_ivm_events_profile,
         )
         for e in range(3):
             ingest(
@@ -12202,24 +12210,7 @@ def events_ivm_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         view = _ivm_streamed_store(spark, sf_dir)
     except _store_errors():
-        ev = load_table(spark, sf_dir, "events")
-        l = ev.select(
-            F.col("user_id").alias("uid"),
-            F.date_trunc("day", "ts").alias("day"),
-            "event_type",
-            "value",
-        )
-        r = (
-            ev.select(
-                F.col("user_id").alias("uid"),
-                F.date_trunc("day", "ts").alias("day"),
-                (F.col("event_id") % 3).alias("_ep"),
-            )
-            .groupBy("uid", "day", "_ep")
-            .agg(F.count(F.lit(1)).alias("rn"))
-            .drop("_ep")
-        )
-        view = l.join(r, ["uid", "day"])
+        view = _ivm_events_recompute(_ivm_events_source(spark, sf_dir))
     return view.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         stable_sum("value", "val_sum"),
@@ -12248,20 +12239,12 @@ def _ivm_streamed_delete_store(spark: SparkSession, sf_dir: str):
     from .streaming.ivm import make_ivm_delete_ingest, make_ivm_ingest
 
     def build(path, _table):
-        ev = load_table(spark, sf_dir, "events").select(
-            F.col("user_id").alias("uid"),
-            F.date_trunc("day", "ts").alias("day"),
-            "event_type",
-            "value",
-            "event_id",
-        )
+        ev = _ivm_events_source(spark, sf_dir)
         ingest = make_ivm_ingest(
             spark,
             path,
             on=["uid", "day"],
-            right_deltas=lambda b: b.groupBy("uid", "day").agg(
-                F.count(F.lit(1)).alias("rn")
-            ),
+            right_deltas=_ivm_events_profile,
             stream_id="cdc",
             partition_col="day",
         )
@@ -12347,26 +12330,10 @@ def events_ivm_streamed_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         view = _ivm_streamed_delete_store(spark, sf_dir)
     except _store_errors():
-        ev = load_table(spark, sf_dir, "events").filter(
-            (F.col("event_id") % 3 == 2) | (F.col("user_id") % 10 != 3)
+        ev = _ivm_events_source(spark, sf_dir).filter(
+            (F.col("event_id") % 3 == 2) | (F.col("uid") % 10 != 3)
         )
-        l = ev.select(
-            F.col("user_id").alias("uid"),
-            F.date_trunc("day", "ts").alias("day"),
-            "event_type",
-            "value",
-        )
-        r = (
-            ev.select(
-                F.col("user_id").alias("uid"),
-                F.date_trunc("day", "ts").alias("day"),
-                (F.col("event_id") % 3).alias("_ep"),
-            )
-            .groupBy("uid", "day", "_ep")
-            .agg(F.count(F.lit(1)).alias("rn"))
-            .drop("_ep")
-        )
-        view = l.join(r, ["uid", "day"])
+        view = _ivm_events_recompute(ev)
     return view.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         stable_sum("value", "val_sum"),

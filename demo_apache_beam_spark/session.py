@@ -13,10 +13,18 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def default_cpus() -> str:
+    """``$SPARK_GRAFT_CPUS`` when set, else the number of CPUs this
+    process may run on: the local master's thread count and the shuffle
+    partition count."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
 #: Config applied to every session the engine creates. Safe to apply on an
 #: existing session for the SQL-conf subset (driver-provided sessions).
 ENGINE_SQL_CONF: dict[str, str] = {
-    "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+    "spark.sql.shuffle.partitions": default_cpus(),
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     # AQE's coalescing floor is BYTE-based (default 1 MB): a post-shuffle
@@ -44,12 +52,21 @@ ENGINE_SQL_CONF: dict[str, str] = {
     # Parquet scans: vectorized reader + pushdown are on by default; keep
     # files splittable at ~128MB so a 100 TB table yields ~800k tasks, not 8.
     "spark.sql.files.maxPartitionBytes": "134217728",
+    # Generated classes are cached per JVM, least recently used out first,
+    # at most 100 by default. The batch queries are short and run over and
+    # over, and a cache smaller than their working set recompiles (Janino,
+    # then class loading and JIT) on every run: one perfbench `batch` pass
+    # needs 159 distinct classes, so at 100 each steady pass recompiled
+    # 90 to 115. One sweep of every registry query needs 2,604 at sf0.001
+    # and 2,618 at sf0.01; 4096 is the smallest power of two that holds
+    # it. Static conf: only sessions get_spark builds get it.
+    "spark.sql.codegen.cache.maxEntries": "4096",
 }
 
 
 def get_spark(app_name: str = "demo-apache-beam-spark", cpus: int | str | None = None) -> SparkSession:
     """Create (or fetch) a SparkSession with the engine's config."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -65,7 +82,13 @@ def get_spark(app_name: str = "demo-apache-beam-spark", cpus: int | str | None =
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable SQL conf to an externally created session
-    (e.g. the driver's). Static conf (driver memory, master) is left alone."""
+    (e.g. the driver's).
+
+    Static conf takes effect only in a session :func:`get_spark` builds:
+    the generated-code cache size (``spark.sql.codegen.cache.maxEntries``),
+    the master and the driver memory are fixed once the JVM is up, so they
+    are skipped here. A session its owner built keeps Spark's cache of 100
+    classes unless its own builder sets the cap."""
     for k, v in ENGINE_SQL_CONF.items():
         try:
             spark.conf.set(k, v)

@@ -2370,3 +2370,40 @@ def test_ivm_partition_col_layout_prunes_and_stays_exchange_free(
             on=["k", "day"],
             partition_col="lv",
         )
+
+
+def test_ivm_queries_fall_back_to_oracle_rows(spark, tmp_path, monkeypatch, caplog):
+    """With the store root unwritable, every IVM query whose fallback
+    recomputes its view from the shared source projections must still
+    match its oracle, and each store must report the fallback. The root
+    lies under a regular file, so creating it fails whatever the user's
+    permissions; the memo is cleared so no store served earlier in the
+    session short-circuits the bootstrap."""
+    import logging
+
+    from conftest import assert_parity
+
+    from demo_apache_beam_spark.queries import _STORE_MEMO
+
+    blocker = tmp_path / "a_file"
+    blocker.write_text("")
+    monkeypatch.setenv("SPARK_GRAFT_STORE_DIR", str(blocker / "stores"))
+    _STORE_MEMO.clear()
+    logger = "demo_apache_beam_spark.queries"
+    with caplog.at_level(logging.WARNING, logger=logger):
+        for name in (
+            "orders_lineitem_ivm_rollup",
+            "orders_lineitem_ivm_agg",
+            "orders_lineitem_ivm_delete",
+            "orders_lineitem_ivm_delete_agg",
+            "events_ivm_streamed",
+            "events_ivm_streamed_delete",
+        ):
+            assert_parity(spark, name)
+    warned = {r.getMessage().split()[1] for r in caplog.records if r.name == logger}
+    assert warned == {
+        "ivm_orders_lineitem",
+        "ivm_del_orders_lineitem",
+        "ivm_stream_events",
+        "ivm_stream_del_events",
+    }
