@@ -1,29 +1,28 @@
-"""Scoped ``localCheckpoint`` tracking for long-running drivers.
+"""The one staging primitive: :func:`stage` and its release scope
+:func:`staged`.
 
-``DataFrame.localCheckpoint`` pins its materialized RDD in the
-session-global persistent-RDD map until explicitly unpersisted, so a
-long-running ``foreachBatch`` stream must free the blocks each batch
-creates or accumulate them without bound. The obvious cleanup — diff
-the GLOBAL map before/after the batch and unpersist every new id — is
-wrong under concurrency: any OTHER job sharing the SparkSession (a
-second stream, a parallel batch query) that caches or checkpoints
-during the window gets its RDD unpersisted too, and because
-``localCheckpoint`` truncates lineage, that RDD is unrecoverable — the
-other job dies with missing-checkpoint-block errors (ADVICE r6).
+:func:`stage` is ``df.localCheckpoint(eager)`` that also records the
+JVM RDD id it pinned in the innermost open :func:`staged` scope of the
+calling thread; outside any scope it is exactly ``localCheckpoint``.
+The pin lives in the session-global persistent-RDD map until it is
+unpersisted, so a long-running driver (a ``foreachBatch`` stream, a
+nightly refresh) wraps each unit of work in ``with staged(spark):``,
+which unpersists exactly the RDDs staged inside it on exit, on error
+too:
 
-This module scopes the cleanup to exactly the checkpoints the current
-code path takes: :func:`tracked_local_checkpoint` records the concrete
-JVM RDD id behind each checkpoint it performs into a **thread-local**
-ledger opened by :func:`track_checkpoints`. ``foreachBatch`` runs the
-ingest body on a single thread, so the ledger captures every
-checkpoint the batch creates — including intermediates inside called
-operators (connected-components rounds, band materialization) —
-and nothing any concurrent thread creates. Outside an open ledger the
-helper is byte-for-byte ``df.localCheckpoint()``.
+- scopes are **thread-local**: ``foreachBatch`` runs a batch body on
+  one thread, so its scope holds every pin the batch takes, including
+  those inside called operators (connected-components rounds, band
+  materialization), and nothing a concurrent thread takes;
+- scopes **nest**: the innermost open scope owns a pin, and only its
+  own scope releases it.
 
-The RDD id is read off the checkpointed DataFrame's logical plan
-(``LogicalRDD.rdd``), which is the exact RDD ``localCheckpoint``
-registered in the persistent map — no global diffing anywhere.
+Cleanup never diffs the global map: another job sharing the session
+(a second stream, a parallel batch query) that checkpoints during the
+window keeps its RDD, which matters because ``localCheckpoint``
+truncates lineage and a freed block is unrecoverable. The id is read
+off the staged DataFrame's plan (``LogicalRDD.rdd``), the exact RDD
+``localCheckpoint`` registered.
 """
 
 from __future__ import annotations
@@ -34,60 +33,57 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
-_LEDGER = threading.local()
+_SCOPE = threading.local()
+_WARNED_EXTRACTION = False
 
 
-@contextmanager
-def track_checkpoints() -> Iterator[list[int]]:
-    """Open a thread-local ledger; every
-    :func:`tracked_local_checkpoint` on this thread appends the RDD id
-    it pinned. Nests: the innermost ledger wins, and the outer one is
-    restored on exit (ids recorded inner are NOT re-recorded outer —
-    the inner scope owns their cleanup)."""
-    ids: list[int] = []
-    prev = getattr(_LEDGER, "ids", None)
-    _LEDGER.ids = ids
-    try:
-        yield ids
-    finally:
-        _LEDGER.ids = prev
-
-
-def tracked_local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` that records the pinned RDD id in
-    the open ledger (no-op recording when none is open)."""
+def stage(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df.localCheckpoint(eager)``, recording the pinned RDD id in the
+    innermost open :func:`staged` scope of this thread (if any)."""
     out = df.localCheckpoint(eager)
-    ids = getattr(_LEDGER, "ids", None)
-    if ids is not None:
+    pins = getattr(_SCOPE, "pins", None)
+    if pins is not None:
         try:
-            ids.append(int(out._jdf.queryExecution().analyzed().rdd().id()))
+            pins.append(int(out._jdf.queryExecution().analyzed().rdd().id()))
         except Exception:
-            # tracking must never fail the query — but a silently inert
-            # ledger reverts every batch to unbounded pinned-RDD growth
-            # (ADVICE r7), so warn ONCE per process instead of nothing:
-            # operators see the leak signal, not an eventual executor OOM
+            # recording must never fail the query, but a silently inert
+            # scope reverts every batch to unbounded pinned-RDD growth,
+            # so warn ONCE per process: the leak signal, not an
+            # eventual executor OOM
             global _WARNED_EXTRACTION
             if not _WARNED_EXTRACTION:
                 _WARNED_EXTRACTION = True
                 import warnings
 
                 warnings.warn(
-                    "tracked_local_checkpoint: JVM RDD-id extraction failed; "
-                    "the checkpoint ledger is inert and localCheckpoint RDDs "
-                    "will accumulate until the session ends",
+                    "stage: JVM RDD-id extraction failed; staged scopes "
+                    "are inert and localCheckpoint RDDs will accumulate "
+                    "until the session ends",
                     RuntimeWarning,
                     stacklevel=2,
                 )
     return out
 
 
-_WARNED_EXTRACTION = False
+@contextmanager
+def _pins() -> Iterator[list[int]]:
+    """Open a thread-local scope collecting the RDD ids :func:`stage`
+    pins on this thread; the enclosing scope is restored on exit."""
+    pins: list[int] = []
+    prev = getattr(_SCOPE, "pins", None)
+    _SCOPE.pins = pins
+    try:
+        yield pins
+    finally:
+        _SCOPE.pins = prev
 
 
-def unpersist_ids(spark: SparkSession, ids: list[int]) -> None:
-    """Release exactly the given persistent-RDD ids (non-blocking).
-    Ids already gone are skipped; concurrent jobs' RDDs are untouched
-    by construction."""
+def _release(spark: SparkSession, ids: list[int]) -> None:
+    """Unpersist exactly the given persistent-RDD ids (non-blocking).
+    Ids already gone are skipped; other jobs' RDDs are untouched by
+    construction."""
+    if not ids:
+        return
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
         want = set(ids)
@@ -96,3 +92,15 @@ def unpersist_ids(spark: SparkSession, ids: list[int]) -> None:
                 entry.getValue().unpersist(False)
     except Exception:
         pass  # cleanup must never fail the caller
+
+
+@contextmanager
+def staged(spark: SparkSession) -> Iterator[None]:
+    """Scope the pins :func:`stage` takes on this thread: every RDD
+    staged inside the block is unpersisted when it exits, on error
+    too."""
+    with _pins() as pins:
+        try:
+            yield
+        finally:
+            _release(spark, pins)

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .checkpoints import stage, staged
 from .text import tokens_col
 
 # ---------------------------------------------------------------------------
@@ -117,12 +118,11 @@ def jaccard_pairs(
     # verification all read the staged rows instead of re-running the
     # regex per consumer. At warehouse scale this is the usual "write the
     # shingled corpus to a temp table" step.
-    sets = (
+    sets = stage(
         spread(df)
         .select(
             F.col(id_col), *[F.col(c) for c in group_cols], token_set_col(text_col).alias("_ts")
         )
-        .localCheckpoint()
     )
     toks = sets.select(F.col(id_col), F.explode("_ts").alias("_t"))
     if strategy in ("auto", "bitset"):
@@ -170,12 +170,11 @@ def _jaccard_pairs_bitset(
     # localCheckpoint materializes the tiny (id, size, mask, groups) rows
     # once so the salted self-join below doesn't re-run tokenization for
     # each side — the same role as building a join index.
-    masks = (
+    masks = stage(
         toks.join(F.broadcast(vocab_df), "_t")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("_sz"), *word_aggs)
         .join(sets.select(id_col, *group_cols), id_col)
-        .localCheckpoint()
     )
     a = masks.withColumn("_salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
     b = masks.withColumn(
@@ -314,14 +313,13 @@ def containment_pairs(
     group_cols = list(group_cols or [])
     from ..sources.tables import spread
 
-    sets = (
+    sets = stage(
         spread(df)
         .select(
             F.col(id_col),
             *[F.col(c) for c in group_cols],
             token_set_col(text_col).alias("_ts"),
         )
-        .localCheckpoint()
     )
     toks = sets.select(F.col(id_col), F.explode("_ts").alias("_t"))
     if strategy in ("auto", "bitset"):
@@ -363,12 +361,11 @@ def _containment_pairs_bitset(
         ).alias(f"_m{w}")
         for w in range(n_words)
     ]
-    masks = (
+    masks = stage(
         toks.join(F.broadcast(vocab_df), "_t")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("_sz"), *word_aggs)
         .join(sets.select(id_col, *group_cols), id_col)
-        .localCheckpoint()
     )
     # a = the subset-candidate (probe) side, salted once; b = the superset
     # side, replicated across salt buckets — the asymmetric roles map onto
@@ -660,10 +657,10 @@ def minhash_dedup_pairs(
         F.array_min(F.transform("_sh", _seeded(i))).alias(f"mh{i}")
         for i in range(num_hashes)
     ]
-    staged = sh_rows.select(F.col(id_col), "_sh", *mins).localCheckpoint()
-    sigs = staged.drop("_sh")
+    sig_rows = stage(sh_rows.select(F.col(id_col), "_sh", *mins))
+    sigs = sig_rows.drop("_sh")
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands, portable)
-    sh = staged.select(id_col, "_sh")
+    sh = sig_rows.select(id_col, "_sh")
     inter = F.size(F.array_intersect(F.col("a._sh"), F.col("b._sh")))
     union = F.size(F.array_union(F.col("a._sh"), F.col("b._sh")))
     return (
@@ -767,7 +764,7 @@ def simhash_near_pairs(
     (:func:`hamming_near_pairs`) — the image dHash near-dup reuses it
     over decoded-pixel fingerprints.
     """
-    sigs = simhash_signatures(df, id_col, text_col, portable).localCheckpoint()
+    sigs = stage(simhash_signatures(df, id_col, text_col, portable))
     return hamming_near_pairs(
         sigs,
         id_col=id_col,
@@ -1198,19 +1195,18 @@ def exact_dedup_core(
     winner/anti-join logic must not drift between batch and stream
     (review r10). Given the increment and the accepted-history digests
     (``_ck`` column; ``None`` for a bootstrap), return the surviving
-    ``(_ck, id)`` winners, localCheckpointed (tracked) so the caller
+    ``(_ck, id)`` winners, staged so the caller
     can mutate the store afterwards without re-running the plan —
     first-seen-wins within the increment (min id per digest) and
     across increments (history anti-join)."""
-    from .checkpoints import tracked_local_checkpoint
 
     keyed = new_df.select(content_key(key_cols).alias("_ck"), F.col(id_col))
     firsts = keyed.groupBy("_ck").agg(F.min(id_col).alias(id_col))
     if hist_keys is not None:
         firsts = firsts.join(hist_keys.select("_ck"), "_ck", "left_anti")
-    # freeze winners before the store mutates; tracked so a looping
-    # caller (epoch driver, foreachBatch) can scope + free the blocks
-    return tracked_local_checkpoint(firsts)
+    # freeze winners before the store mutates; a looping caller (epoch
+    # driver, foreachBatch) frees the blocks with its staged scope
+    return stage(firsts)
 
 
 def _hadoop_path_exists(spark, path: str) -> bool:
@@ -1302,7 +1298,7 @@ def minhash_near_dedup_core(
     store is batch-id partitioned for replay idempotence): given the
     increment and the accepted-history band rows (or ``None`` for a
     bootstrap), return ``(survivor_ids, increment_band_rows)`` — both
-    localCheckpointed so callers can mutate the store afterwards without
+    staged so callers can mutate the store afterwards without
     re-running the plan.
 
     ``banded`` optionally supplies ``new_df``'s band rows when the
@@ -1312,13 +1308,12 @@ def minhash_near_dedup_core(
     ``band_rows(minhash_signatures(new_df, ...))`` under the same
     parameters, ideally derived from a checkpointed plan so no
     signature recompute hides inside it."""
-    from .checkpoints import tracked_local_checkpoint
     from .graph import connected_components
 
     if banded is None:
         sigs = minhash_signatures(new_df, id_col, text_col, num_hashes, shingle_n)
         banded = band_rows(sigs, id_col, num_hashes, bands)
-    banded = tracked_local_checkpoint(banded)
+    banded = stage(banded)
 
     if hist_bands is not None:
         hist_hits = (
@@ -1368,7 +1363,7 @@ def minhash_near_dedup_core(
         .filter(F.col("_any_hist") == 0)
         .select(id_col)
     )
-    survivors = tracked_local_checkpoint(survivors)  # freeze before the store mutates
+    survivors = stage(survivors)  # freeze before the store mutates
     return survivors, banded
 
 
@@ -1458,10 +1453,9 @@ def incremental_hamming_dedup_core(
     (micro-batch-sized increments usually take its pairwise path; the
     auto count runs over the checkpointed 8-byte rows, not the decode
     plan)."""
-    from .checkpoints import tracked_local_checkpoint
     from .graph import connected_components
 
-    sigs = tracked_local_checkpoint(sigs.select(id_col, sig_col))
+    sigs = stage(sigs.select(id_col, sig_col))
     banded = hamming_probe_rows(sigs, id_col, sig_col, num_blocks, rotations)
     if hist_bands is not None:
         hist_hits = (
@@ -1511,7 +1505,7 @@ def incremental_hamming_dedup_core(
         .filter(F.col("_any_hist") == 0)
         .select(id_col)
     )
-    survivors = tracked_local_checkpoint(survivors)  # freeze before store writes
+    survivors = stage(survivors)  # freeze before store writes
     return survivors, banded
 
 
@@ -1543,25 +1537,17 @@ def erase_from_exact_store(
     filters tombstoned digests on every delivery so epoch replay
     cannot resurrect them. Returns erase_rows' ``{rows_before,
     rows_erased, rows_after}``."""
-    from .checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
     from .layout import erase_rows
 
     keys = docs.select(content_key(key_cols).alias("_ck"))
     # scope the freeze: a long-lived DSR session erasing in a loop must
     # not accumulate pinned checkpoint blocks (review r10 — the same
-    # ledger discipline erase_rows applies to its own request set)
-    with track_checkpoints() as _cp:
+    # scope erase_rows applies to its own request set)
+    with staged(spark):
         if _resolve_tombstone(spark, store_path, tombstone):
-            keys = tracked_local_checkpoint(keys)
+            keys = stage(keys)
             keys.write.mode("append").parquet(tombstone_store_path(store_path))
-        try:
-            return erase_rows(spark, store_path, keys, key_col="_ck")
-        finally:
-            unpersist_ids(spark, _cp)
+        return erase_rows(spark, store_path, keys, key_col="_ck")
 
 
 def _is_epoch_partitioned(spark, store_path: str) -> bool:
@@ -1638,11 +1624,6 @@ def erase_from_minhash_store(
     ``__tombstones`` dataset the streaming ingests consult, so a
     redelivered epoch cannot resurrect the erased rows — and a future
     submission of the same content is conservatively blocked."""
-    from .checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
     from .layout import erase_rows
 
     keys = band_rows(
@@ -1651,16 +1632,13 @@ def erase_from_minhash_store(
         num_hashes,
         bands,
     ).select("band_idx", "band_hash")
-    with track_checkpoints() as _cp:  # scoped freeze (review r10)
+    with staged(spark):  # scoped freeze (review r10)
         if _resolve_tombstone(spark, store_path, tombstone):
-            keys = tracked_local_checkpoint(keys)  # one signature pass
+            keys = stage(keys)  # one signature pass
             keys.write.mode("append").parquet(tombstone_store_path(store_path))
-        try:
-            return erase_rows(
-                spark, store_path, keys, key_col=["band_idx", "band_hash"]
-            )
-        finally:
-            unpersist_ids(spark, _cp)
+        return erase_rows(
+            spark, store_path, keys, key_col=["band_idx", "band_hash"]
+        )
 
 
 def erase_from_hamming_store(
@@ -1682,19 +1660,11 @@ def erase_from_hamming_store(
     preservation, and ``tombstone`` semantics as
     :func:`erase_from_minhash_store` (tombstones hold the bare
     signature column)."""
-    from .checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
     from .layout import erase_rows
 
     keys = sigs.select(sig_col)
-    with track_checkpoints() as _cp:  # scoped freeze (review r10)
+    with staged(spark):  # scoped freeze (review r10)
         if _resolve_tombstone(spark, store_path, tombstone):
-            keys = tracked_local_checkpoint(keys)
+            keys = stage(keys)
             keys.write.mode("append").parquet(tombstone_store_path(store_path))
-        try:
-            return erase_rows(spark, store_path, keys, key_col=sig_col)
-        finally:
-            unpersist_ids(spark, _cp)
+        return erase_rows(spark, store_path, keys, key_col=sig_col)

@@ -18,9 +18,10 @@ The neighbor step alone needs O(diameter) rounds on a path graph; the
 doubling step shortcuts label chains so convergence is O(log n) rounds —
 this is what makes the loop viable on billion-edge dup graphs, where
 every round is a full shuffle. Each round is two equi-joins + one
-aggregate; the label table is ``localCheckpoint``ed per round to cut the
-exponentially-growing lineage, and the convergence check is a single
-count of changed labels (a scalar per round to the driver — the loop is
+aggregate; the label table is staged per round (``checkpoints.stage``,
+a ``localCheckpoint`` that an enclosing ``staged`` scope releases) to cut
+the exponentially-growing lineage, and the convergence check is a single
+exact sum of the labels (a scalar per round to the driver — the loop is
 driver-coordinated but never moves data).
 """
 
@@ -29,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .checkpoints import tracked_local_checkpoint
+from .checkpoints import stage
 
 
 def connected_components(
@@ -47,7 +48,7 @@ def connected_components(
     """
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
-    sym = tracked_local_checkpoint(sym.filter(F.col("s") != F.col("d")).distinct())
+    sym = stage(sym.filter(F.col("s") != F.col("d")).distinct())
 
     from pyspark.sql import Observation
 
@@ -61,7 +62,7 @@ def connected_components(
         return F.sum(F.col("label").cast("decimal(38,0)")).alias("s")
 
     obs0 = Observation()
-    labels = tracked_local_checkpoint(
+    labels = stage(
         labels.withColumn("label", F.col("id")).observe(obs0, _sum_metric())
     )
 
@@ -106,7 +107,7 @@ def connected_components(
             )
         )
         obs = Observation()
-        jumped = tracked_local_checkpoint(jumped.observe(obs, _sum_metric()))
+        jumped = stage(jumped.observe(obs, _sum_metric()))
         labels = jumped
         new_sum = obs.get["s"]  # delivered by the checkpoint action itself
         if new_sum == prev_sum:
@@ -153,7 +154,7 @@ def pagerank(
       ONCE before the loop (out-degrees never change), so graphs with
       none — every k-out-regular kNN graph — skip the per-round
       collect job entirely;
-    - the rank table is ``localCheckpoint``ed each round: without it the
+    - the rank table is staged each round: without it the
       lineage doubles per iteration and stage-retry cost explodes —
       the same discipline as ``connected_components`` above.
 
@@ -170,7 +171,7 @@ def pagerank(
     # an already-distinct set is the identity, so output is unchanged.
     if not edges_distinct:
         e = e.distinct()
-    e = e.localCheckpoint()
+    e = stage(e)
     from pyspark.sql import Observation
 
     # Driver scalars ride the materialization actions as ``observe``
@@ -181,12 +182,11 @@ def pagerank(
     # job (each an extra action and an extra |V| pass). Metrics stream by
     # during the checkpoint for free.
     obs_n = Observation()
-    verts = (
+    verts = stage(
         e.select(F.col("s").alias("id"))
         .unionByName(e.select(F.col("d").alias("id")))
         .distinct()
         .observe(obs_n, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
 
     def _dangling_metric():
@@ -198,10 +198,12 @@ def pagerank(
     outdeg = e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg"))
     # ranks carry outdeg along so the per-round join is edges x ranks only
     obs = Observation()
-    ranks = verts.join(outdeg, verts.id == outdeg.s, "left").select(
-        "id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
-        F.lit(1.0 / n).alias("rank"),
-    ).observe(obs, _dangling_metric()).localCheckpoint()
+    ranks = stage(
+        verts.join(outdeg, verts.id == outdeg.s, "left").select(
+            "id", F.coalesce("outdeg", F.lit(0)).alias("outdeg"),
+            F.lit(1.0 / n).alias("rank"),
+        ).observe(obs, _dangling_metric())
+    )
 
     # initial rank is uniformly 1/n > 0, so dangling MASS > 0 on the first
     # checkpoint ⟺ some vertex has no out-edges — no separate probe job
@@ -240,7 +242,7 @@ def pagerank(
             or i == iterations - 1
         ):
             obs = Observation()
-            ranks = ranks.observe(obs, _dangling_metric()).localCheckpoint()
+            ranks = stage(ranks.observe(obs, _dangling_metric()))
     return ranks.select("id", F.col("rank").alias("pagerank"))
 
 
@@ -266,7 +268,7 @@ def pagerank_weighted(
     equi-join (ranks × edges on the source key, with the out-weight
     denominator pre-joined once) + one partial-aggregating inflow
     groupBy; dangling mass moves as one driver double; per-round
-    ``localCheckpoint`` (measured cadence — see :func:`pagerank`).
+    staging (measured cadence — see :func:`pagerank`).
     Deterministic up to float combine order (~1e-15/round); the
     registry rounds to 6 dp on both engines, same margin as the
     unweighted oracle.
@@ -281,19 +283,18 @@ def pagerank_weighted(
     # its edge shuffle + aggregate are skipped; output unchanged.
     if not edges_distinct:
         e = e.groupBy("s", "d").agg(F.sum("w").alias("w"))
-    e = e.localCheckpoint()
+    e = stage(e)
     from pyspark.sql import Observation
 
     # |V|, the dangling probe, and the per-round dangling mass all ride
     # checkpoint actions as observe metrics — same zero-extra-jobs
     # discipline as the unweighted operator above
     obs_n = Observation()
-    verts = (
+    verts = stage(
         e.select(F.col("s").alias("id"))
         .unionByName(e.select(F.col("d").alias("id")))
         .distinct()
         .observe(obs_n, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
 
     def _dangling_metric():
@@ -304,10 +305,12 @@ def pagerank_weighted(
     n = obs_n.get["n"]
     outw = e.groupBy("s").agg(F.sum("w").alias("outw"))
     obs = Observation()
-    ranks = verts.join(outw, verts.id == outw.s, "left").select(
-        "id", F.coalesce("outw", F.lit(0.0)).alias("outw"),
-        F.lit(1.0 / n).alias("rank"),
-    ).observe(obs, _dangling_metric()).localCheckpoint()
+    ranks = stage(
+        verts.join(outw, verts.id == outw.s, "left").select(
+            "id", F.coalesce("outw", F.lit(0.0)).alias("outw"),
+            F.lit(1.0 / n).alias("rank"),
+        ).observe(obs, _dangling_metric())
+    )
 
     # initial rank is uniformly 1/n > 0: dangling mass > 0 ⟺ dangling exists
     has_dangling = (obs.get["d"] or 0.0) > 0.0
@@ -333,7 +336,7 @@ def pagerank_weighted(
             or i == iterations - 1
         ):
             obs = Observation()
-            ranks = ranks.observe(obs, _dangling_metric()).localCheckpoint()
+            ranks = stage(ranks.observe(obs, _dangling_metric()))
     return ranks.select("id", F.col("rank").alias("pagerank"))
 
 
@@ -358,23 +361,21 @@ def label_propagation(
     Each round is one shuffle join (labels × symmetrized edges) + two
     partial aggregates: count per (vertex, label), then per-vertex
     argmax as one ``max(struct(count, -label))`` — no window sort. The
-    label table is ``localCheckpoint``ed per round (same lineage
+    label table is staged per round (same lineage
     discipline as pagerank); rounds are O(E) shuffles, the standard
     distributed LPA cost.
 
     Returns (id, label) — vertices sharing a label form a community.
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = (
+    und = stage(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
-        .localCheckpoint()
     )
-    labels = (
+    labels = stage(
         und.select(F.col("a").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint()
     )
     for i in range(iterations):
         neigh = und.join(labels, und.a == labels.id).select(
@@ -390,7 +391,7 @@ def label_propagation(
         # per-round checkpoint: measured faster than every-other-round
         # (see the pagerank cadence measurement; LPA medians 3.74s vs
         # 3.95s at sf0.1, clean sessions)
-        labels = labels.localCheckpoint()
+        labels = stage(labels)
     return labels
 
 
@@ -411,7 +412,7 @@ def bfs_distances(
         dist_r(v) = min(dist_{r-1}(v), 1 + min{dist_{r-1}(u) : u~v})
 
     — one equi-join (frontier × edges) + one min-aggregate per round,
-    with the distance table ``localCheckpoint``ed per round (the same
+    with the distance table staged per round (the same
     lineage discipline as the other iterative operators). A fixed round
     count makes the result purely integer and deterministic, which is
     what lets the registry back it with an unrolled SQL oracle. Rounds
@@ -421,17 +422,15 @@ def bfs_distances(
     contamination blast-radius, seed-set coverage).
     """
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    und = (
+    und = stage(
         e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .filter(F.col("a") != F.col("b"))
         .distinct()
-        .localCheckpoint()
     )
-    dist = (
+    dist = stage(
         seeds.select(F.col(seeds.columns[0]).alias("id"))
         .distinct()
         .withColumn("dist", F.lit(0).cast("long"))
-        .localCheckpoint()
     )
     for i in range(rounds):
         nbr = und.join(dist, und.a == dist.id).select(
@@ -443,5 +442,5 @@ def bfs_distances(
             .agg(F.min("dist").alias("dist"))
         )
         # per-round checkpoint (see the pagerank cadence measurement)
-        dist = dist.localCheckpoint()
+        dist = stage(dist)
     return dist

@@ -89,6 +89,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: F401  (callers' convenience)
 
+from .checkpoints import _pins, _release, stage, staged
 from .dedup import _hadoop_path_exists
 
 
@@ -379,8 +380,9 @@ def apply_join_increment(
 ) -> DataFrame:
     """Apply one append-only increment ``(ΔA, ΔB)`` to the materialized
     inner equi-join view at ``store_path``; returns the VIEW DELTA
-    (the new join rows), already localCheckpointed (the caller owns that
-    pin; the internal delta freezes are released before returning).
+    (the new join rows), already staged (the caller's ``staged`` scope
+    owns that pin; the internal delta freezes are released before
+    returning).
 
     ``agg=(group_cols, partial_aggs)`` optionally maintains the
     aggregate view INSIDE the same increment: the dimension-sized
@@ -448,12 +450,6 @@ def apply_join_increment(
     localCheckpointed, so re-freezing (a second full materialization of
     every delta — review r11) is skipped.
     """
-    from .checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
-
     check_store_consistent(spark, store_path)
     keys = [on] if isinstance(on, str) else list(on)
     l_extra = set(delta_left.columns) - set(keys)
@@ -481,18 +477,18 @@ def apply_join_increment(
     # the side-store appends must derive from the same rows — a
     # non-deterministic upstream plan executed twice would let the
     # stored sides diverge from the already-returned view delta. The
-    # freezes are scoped to this increment (ledger + unpersist in
-    # finally): a long-lived nightly-refresh session must not pin two
-    # delta copies per increment forever (review r11). The ledger is
-    # closed before the view-delta checkpoint, so THAT pin — the return
-    # value — stays alive for the caller.
-    _delta_ids: list = []
-    if not _frozen:
-        with track_checkpoints() as _delta_ids:
-            delta_left = tracked_local_checkpoint(delta_left)
-            delta_right = tracked_local_checkpoint(delta_right)
-
+    # freezes are released when this increment ends, on error too: a
+    # long-lived nightly-refresh session must not pin two delta copies
+    # per increment forever (review r11). Their scope closes before the
+    # view-delta stage, so THAT pin — the return value — belongs to the
+    # caller's scope; one ``with staged`` cannot split the two, hence
+    # the private scope + release.
+    delta_pins: list = []
     try:
+        if not _frozen:
+            with _pins() as delta_pins:
+                delta_left = stage(delta_left)
+                delta_right = stage(delta_right)
         l_path, r_path, v_path = (
             os.path.join(store_path, "left"),
             os.path.join(store_path, "right"),
@@ -509,7 +505,7 @@ def apply_join_increment(
         l_old = _part_scoped(l_old, delta_right, partition_col)
         r_old = _part_scoped(r_old, delta_left, partition_col)
 
-        dview = tracked_local_checkpoint(
+        dview = stage(
             _view_delta(
                 l_old, r_old, delta_left, delta_right, keys,
                 prune_col=prune_col,
@@ -542,7 +538,7 @@ def apply_join_increment(
             spark.catalog.refreshTable(t)
         return dview
     finally:
-        unpersist_ids(spark, _delta_ids)
+        _release(spark, delta_pins)
 
 
 def read_join_view(spark, store_path: str) -> DataFrame:
@@ -807,84 +803,75 @@ def apply_left_join_increment(
     epoch: the composite either fully lands (root ledger row present)
     or fails loud via one of the two markers.
     """
-    from .checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
-
     keys = [on] if isinstance(on, str) else list(on)
-    # one ledger spans the whole increment: the delta freezes, the inner
-    # store's view-delta checkpoint (its return value is not used here),
+    # one staged scope spans the whole increment: the delta freezes, the
+    # inner store's view-delta stage (its return value is not used here),
     # and the unmatched-rewrite freeze are all released on exit — none
     # of these pins outlives the increment (review r11)
     check_store_consistent(spark, store_path)
-    with track_checkpoints() as _ckpt:
-        try:
-            delta_left = tracked_local_checkpoint(delta_left)
-            delta_right = tracked_local_checkpoint(delta_right)
+    with staged(spark):
+        delta_left = stage(delta_left)
+        delta_right = stage(delta_right)
 
-            # the root-store marker brackets the WHOLE composite
-            # increment (inner store mutation + unmatched rewrite); the
-            # nested apply_join_increment additionally brackets its own
-            # writes under {store}/inner — both markers clear on
-            # success. Opened after the input freezes so a failure in
-            # the caller's upstream plan (store untouched) doesn't
-            # falsely flag corruption.
-            _begin_increment(spark, store_path)
-            inner = os.path.join(store_path, "inner")
-            apply_join_increment(
-                spark, inner, delta_left, delta_right, on=keys,
-                num_buckets=num_buckets, prune_col=prune_col,
-                _frozen=True,
+        # the root-store marker brackets the WHOLE composite
+        # increment (inner store mutation + unmatched rewrite); the
+        # nested apply_join_increment additionally brackets its own
+        # writes under {store}/inner — both markers clear on
+        # success. Opened after the input freezes so a failure in
+        # the caller's upstream plan (store untouched) doesn't
+        # falsely flag corruption.
+        _begin_increment(spark, store_path)
+        inner = os.path.join(store_path, "inner")
+        apply_join_increment(
+            spark, inner, delta_left, delta_right, on=keys,
+            num_buckets=num_buckets, prune_col=prune_col,
+            _frozen=True,
+        )
+        _, r_all = _attach_side(spark, inner, "right", keys, num_buckets)
+        # the anti-probe prunes too: B_new rows outside ΔA's
+        # prune-column range cannot match any ΔA row, so removing
+        # them cannot flip an anti-join verdict
+        r_all = _pruned(r_all, delta_left, prune_col)
+        um_path = os.path.join(store_path, "unmatched")
+        if _hadoop_path_exists(spark, um_path):
+            um_old = spark.read.parquet(um_path).join(
+                delta_right.select(*keys), keys, "left_anti"
             )
-            _, r_all = _attach_side(spark, inner, "right", keys, num_buckets)
-            # the anti-probe prunes too: B_new rows outside ΔA's
-            # prune-column range cannot match any ΔA row, so removing
-            # them cannot flip an anti-join verdict
-            r_all = _pruned(r_all, delta_left, prune_col)
-            um_path = os.path.join(store_path, "unmatched")
-            if _hadoop_path_exists(spark, um_path):
-                um_old = spark.read.parquet(um_path).join(
-                    delta_right.select(*keys), keys, "left_anti"
-                )
-            else:
-                um_old = None
-            um_new = delta_left.join(r_all.select(*keys), keys, "left_anti")
-            um = um_old.unionByName(um_new) if um_old is not None else um_new
-            # the rewrite plan reads the old store — freeze before
-            # rewriting. Then write-aside → delete → rename (r13, the
-            # erase_rows swap discipline): a plain overwrite deletes the
-            # original FIRST and leaves the old unmatched rows' only
-            # copy in a non-replicated localCheckpoint for the write's
-            # duration — an executor loss in that window would destroy
-            # them (the hazard class the r11 review closed for
-            # compaction). With the aside, the original survives on
-            # disk until the new copy is fully durable.
-            um = tracked_local_checkpoint(um)
-            from .layout import _aside_path
+        else:
+            um_old = None
+        um_new = delta_left.join(r_all.select(*keys), keys, "left_anti")
+        um = um_old.unionByName(um_new) if um_old is not None else um_new
+        # the rewrite plan reads the old store — freeze before
+        # rewriting. Then write-aside → delete → rename (r13, the
+        # erase_rows swap discipline): a plain overwrite deletes the
+        # original FIRST and leaves the old unmatched rows' only
+        # copy in a non-replicated localCheckpoint for the write's
+        # duration — an executor loss in that window would destroy
+        # them (the hazard class the r11 review closed for
+        # compaction). With the aside, the original survives on
+        # disk until the new copy is fully durable.
+        um = stage(um)
+        from .layout import _aside_path
 
-            jvm = spark._jvm
-            p_um = jvm.org.apache.hadoop.fs.Path(um_path)
-            um_fs = p_um.getFileSystem(spark._jsc.hadoopConfiguration())
-            aside = _aside_path(jvm, um_path, "__rewriting")
-            if um_fs.exists(aside):
-                um_fs.delete(aside, True)  # stale leftover: disposable
-            um.write.mode("overwrite").parquet(aside.toString())
-            if um_fs.exists(p_um):
-                um_fs.delete(p_um, True)
-            if not um_fs.rename(aside, p_um):
-                raise OSError(
-                    f"apply_left_join_increment: rename {aside} -> "
-                    f"{um_path} failed — the rewritten unmatched set "
-                    "is durable at the aside path; restore it manually"
-                )
-            spark.catalog.refreshByPath(um_path)
-            if epoch is not None:
-                _append_ledger(spark, store_path, epoch, stream_id)
-            _end_increment(spark, store_path)
-        finally:
-            unpersist_ids(spark, _ckpt)
+        jvm = spark._jvm
+        p_um = jvm.org.apache.hadoop.fs.Path(um_path)
+        um_fs = p_um.getFileSystem(spark._jsc.hadoopConfiguration())
+        aside = _aside_path(jvm, um_path, "__rewriting")
+        if um_fs.exists(aside):
+            um_fs.delete(aside, True)  # stale leftover: disposable
+        um.write.mode("overwrite").parquet(aside.toString())
+        if um_fs.exists(p_um):
+            um_fs.delete(p_um, True)
+        if not um_fs.rename(aside, p_um):
+            raise OSError(
+                f"apply_left_join_increment: rename {aside} -> "
+                f"{um_path} failed — the rewritten unmatched set "
+                "is durable at the aside path; restore it manually"
+            )
+        spark.catalog.refreshByPath(um_path)
+        if epoch is not None:
+            _append_ledger(spark, store_path, epoch, stream_id)
+        _end_increment(spark, store_path)
 
 
 def read_left_join_view(spark, store_path: str) -> DataFrame:
@@ -969,112 +956,104 @@ def apply_delete_increment(
     Returns per-dataset removed-row counts:
     ``{"left": n, "right": n, "view": n, "agg_groups": n}``.
     """
-    from .checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
     from .layout import erase_rows
 
     check_store_consistent(spark, store_path)
     join_keys = [on] if isinstance(on, str) else list(on)
     out = {"left": 0, "right": 0, "view": 0, "agg_groups": 0}
-    with track_checkpoints() as _cp:
-        try:
-            req = tracked_local_checkpoint(
-                keys.select(F.col(key_col).alias("__del_key")).distinct()
-            )
-            probe = F.col(key_col) == F.col("__del_key")
+    with staged(spark):
+        req = stage(
+            keys.select(F.col(key_col).alias("__del_key")).distinct()
+        )
+        probe = F.col(key_col) == F.col("__del_key")
 
-            sides = {}
-            for sub in ("left", "right"):
-                _, df = _attach_side(
-                    spark, store_path, sub, join_keys, num_buckets
-                )
-                if df is not None and key_col in df.columns:
-                    sides[sub] = df
-            if not sides:
-                raise ValueError(
-                    f"apply_delete_increment: {key_col!r} is not a column "
-                    "of any stored side — nothing identifies the rows to "
-                    "delete"
-                )
-
-            v_path = os.path.join(store_path, "view")
-            view = (
-                spark.read.parquet(v_path)
-                if _hadoop_path_exists(spark, v_path)
-                else None
+        sides = {}
+        for sub in ("left", "right"):
+            _, df = _attach_side(
+                spark, store_path, sub, join_keys, num_buckets
             )
-            has_agg = _hadoop_path_exists(
-                spark, os.path.join(store_path, "agg")
+            if df is not None and key_col in df.columns:
+                sides[sub] = df
+        if not sides:
+            raise ValueError(
+                f"apply_delete_increment: {key_col!r} is not a column "
+                "of any stored side — nothing identifies the rows to "
+                "delete"
             )
-            if has_agg and agg is None:
-                # deleting view rows while keeping their positive
-                # partials would leave the maintained aggregate
-                # silently STALE — the one corruption this module
-                # exists to prevent; the caller must supply the same
-                # (group_cols, partial_aggs) spec the inserts used
-                raise ValueError(
-                    "apply_delete_increment: the store maintains an "
-                    "aggregate view (agg/ exists) but no agg= spec was "
-                    "given — the delete must append matching NEGATIVE "
-                    "partials or the aggregate goes stale"
-                )
-            neg_partial = None
-            if view is not None and agg is not None and has_agg:
-                group_cols, partial_aggs = agg
-                removed = view.join(F.broadcast(req), probe, "left_semi")
-                part = removed.groupBy(*group_cols).agg(*partial_aggs)
-                # negate every partial column, cast back to its own type
-                # so the parquet append schema stays byte-compatible
-                # (unary minus widens some numeric types)
-                neg_partial = tracked_local_checkpoint(
-                    part.select(
-                        *group_cols,
-                        *[
-                            (-F.col(f.name)).cast(f.dataType).alias(f.name)
-                            for f in part.schema.fields
-                            if f.name not in group_cols
-                        ],
-                    )
-                )
-                out["agg_groups"] = neg_partial.count()
 
-            _begin_increment(spark, store_path)
-            if neg_partial is not None:
-                neg_partial.write.mode("append").parquet(
-                    os.path.join(store_path, "agg")
+        v_path = os.path.join(store_path, "view")
+        view = (
+            spark.read.parquet(v_path)
+            if _hadoop_path_exists(spark, v_path)
+            else None
+        )
+        has_agg = _hadoop_path_exists(
+            spark, os.path.join(store_path, "agg")
+        )
+        if has_agg and agg is None:
+            # deleting view rows while keeping their positive
+            # partials would leave the maintained aggregate
+            # silently STALE — the one corruption this module
+            # exists to prevent; the caller must supply the same
+            # (group_cols, partial_aggs) spec the inserts used
+            raise ValueError(
+                "apply_delete_increment: the store maintains an "
+                "aggregate view (agg/ exists) but no agg= spec was "
+                "given — the delete must append matching NEGATIVE "
+                "partials or the aggregate goes stale"
+            )
+        neg_partial = None
+        if view is not None and agg is not None and has_agg:
+            group_cols, partial_aggs = agg
+            removed = view.join(F.broadcast(req), probe, "left_semi")
+            part = removed.groupBy(*group_cols).agg(*partial_aggs)
+            # negate every partial column, cast back to its own type
+            # so the parquet append schema stays byte-compatible
+            # (unary minus widens some numeric types)
+            neg_partial = stage(
+                part.select(
+                    *group_cols,
+                    *[
+                        (-F.col(f.name)).cast(f.dataType).alias(f.name)
+                        for f in part.schema.fields
+                        if f.name not in group_cols
+                    ],
                 )
-            if view is not None:
-                stats = erase_rows(
-                    spark, v_path, req, key_col=key_col, id_col="__del_key"
-                )
-                out["view"] = stats["rows_erased"]
-            for sub in sides:
-                # probe first (footer count + broadcast semi-join — the
-                # erase_rows discipline): a side with ZERO matching rows
-                # must not pay a full rewrite+swap; a re-drained DSR
-                # queue then costs two probes, not two compactions
-                n_match = (
-                    sides[sub]
-                    .join(F.broadcast(req), probe, "left_semi")
-                    .count()
-                )
-                if n_match == 0:
-                    out[sub] = 0
-                    continue
-                _bucketed_rewrite_swap(
-                    spark, store_path, sub, join_keys, num_buckets,
-                    lambda df: df.join(F.broadcast(req), probe, "left_anti"),
-                )
-                out[sub] = n_match
-            if epoch is not None:
-                _append_ledger(spark, store_path, epoch, stream_id)
-            _end_increment(spark, store_path)
-            return out
-        finally:
-            unpersist_ids(spark, _cp)
+            )
+            out["agg_groups"] = neg_partial.count()
+
+        _begin_increment(spark, store_path)
+        if neg_partial is not None:
+            neg_partial.write.mode("append").parquet(
+                os.path.join(store_path, "agg")
+            )
+        if view is not None:
+            stats = erase_rows(
+                spark, v_path, req, key_col=key_col, id_col="__del_key"
+            )
+            out["view"] = stats["rows_erased"]
+        for sub in sides:
+            # probe first (footer count + broadcast semi-join — the
+            # erase_rows discipline): a side with ZERO matching rows
+            # must not pay a full rewrite+swap; a re-drained DSR
+            # queue then costs two probes, not two compactions
+            n_match = (
+                sides[sub]
+                .join(F.broadcast(req), probe, "left_semi")
+                .count()
+            )
+            if n_match == 0:
+                out[sub] = 0
+                continue
+            _bucketed_rewrite_swap(
+                spark, store_path, sub, join_keys, num_buckets,
+                lambda df: df.join(F.broadcast(req), probe, "left_anti"),
+            )
+            out[sub] = n_match
+        if epoch is not None:
+            _append_ledger(spark, store_path, epoch, stream_id)
+        _end_increment(spark, store_path)
+        return out
 
 
 def erase_from_ivm_store(

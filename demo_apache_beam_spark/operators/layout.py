@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoints import stage, staged
+
 
 def scaled_rank(col: str, mn: str, mx: str, bits: int) -> Column:
     """Map an integer column with known [``mn``, ``mx``] bound columns onto
@@ -197,8 +199,6 @@ def erase_rows(
     erasing by band_hash only could collateral-delete another accepted
     document's row that shares the hash under a different band index).
     """
-    from .checkpoints import track_checkpoints, tracked_local_checkpoint, unpersist_ids
-
     key_cols = [key_col] if isinstance(key_col, str) else list(key_col)
     id_cols = (
         key_cols
@@ -211,30 +211,14 @@ def erase_rows(
             f"{len(key_cols)}"
         )
     probe_cols = [f"__erase_{i}" for i in range(len(key_cols))]
-    # the checkpointed request set is released on exit (ADVICE r7): the
-    # streaming erasure path calls this once per micro-batch, and without
-    # the release a long-running stream pins one RDD per epoch — the leak
-    # class the ledger already closed for the dedup/top-k streams.
     # ``_frozen`` (internal, erase_rows_multi): the caller already
-    # distinct-checkpointed a __erase_id set and owns its release — a
+    # distinct-staged a __erase_id set and owns its release — a
     # per-table re-freeze would run one extra eager job and pin one
     # extra RDD per target table (review r8)
-    _cp_ids: list = []
     if _frozen:
         if len(key_cols) != 1:
             raise ValueError("erase_rows: _frozen supports a single key only")
-        req = ids
         probe_cols = ["__erase_id"]
-    else:
-        with track_checkpoints() as _cp_ids:
-            req = tracked_local_checkpoint(
-                ids.select(
-                    *[
-                        F.col(c).alias(p)
-                        for c, p in zip(id_cols, probe_cols)
-                    ]
-                ).distinct()
-            )
 
     def _match_cond():
         cond = F.col(key_cols[0]) == F.col(probe_cols[0])
@@ -297,10 +281,16 @@ def erase_rows(
             "rows_after": before - erased,
         }
 
-    try:
+    # the staged request set is released on exit (ADVICE r7): the
+    # streaming erasure path calls this once per micro-batch, and without
+    # the release a long-running stream pins one RDD per epoch
+    with staged(spark):
+        req = ids if _frozen else stage(
+            ids.select(
+                *[F.col(c).alias(p) for c, p in zip(id_cols, probe_cols)]
+            ).distinct()
+        )
         return _erase(path)
-    finally:
-        unpersist_ids(spark, _cp_ids)
 
 
 def erase_rows_multi(
@@ -365,8 +355,6 @@ def erase_rows_multi(
     another subject's accepted content, stops deduping against it) —
     the store holds fingerprints, not documents, so no other subject's
     data is removed."""
-    from .checkpoints import track_checkpoints, tracked_local_checkpoint, unpersist_ids
-
     dedup_specs: list[dict] = []
     if store_catalog is not None:
         from .catalog import dedup_stores_from_catalog, ivm_stores_from_catalog
@@ -380,24 +368,21 @@ def erase_rows_multi(
             spark, store_catalog, list(targets.keys())
         )
 
-    with track_checkpoints() as _cp_ids:
-        req = tracked_local_checkpoint(
-            ids.select(F.col(id_col).alias("__erase_id")).distinct()
-        )
+    with staged(spark):
+        req = stage(ids.select(F.col(id_col).alias("__erase_id")).distinct())
         # capture the subject's doc rows for every dedup store NOW —
         # the tables are about to be rewritten without them
         captured: dict[str, DataFrame] = {}
         for spec in dedup_specs:
             path, key_col = targets[spec["source_table"]]
             src = spark.read.parquet(path)
-            captured[spec["store_name"]] = tracked_local_checkpoint(
+            captured[spec["store_name"]] = stage(
                 src.join(
                     F.broadcast(req),
                     src[key_col] == req["__erase_id"],
                     "left_semi",
                 )
             )
-    try:
         out = {
             name: erase_rows(
                 spark,
@@ -406,7 +391,7 @@ def erase_rows_multi(
                 key_col,
                 id_col="__erase_id",
                 sort_col=(sort_cols or {}).get(name),
-                _frozen=True,  # req is already a distinct-checkpointed
+                _frozen=True,  # req is already a distinct-staged
                 # __erase_id set; no per-table re-freeze
             )
             for name, (path, key_col) in targets.items()
@@ -461,8 +446,6 @@ def erase_rows_multi(
                         shingle_n=int(p.get("shingle_n", 3)),
                     )
         return out
-    finally:
-        unpersist_ids(spark, _cp_ids)
 
 
 def training_shuffle(

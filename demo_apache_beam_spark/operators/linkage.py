@@ -36,6 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoints import stage, staged
+
 
 @dataclass(frozen=True)
 class FieldComparator:
@@ -508,13 +510,12 @@ def linkage_resolve_core(
        record id as the new entity id.
 
     Returns one ``(id_col, entity_id)`` row per batch record,
-    localCheckpointed (tracked) so the caller can append to the registry
+    staged so the caller can append to the registry
     afterwards without the lazy store read re-listing its own writes
     (the exact_dedup_core freeze discipline). ``hist`` must carry the
     blocking/comparison columns under the batch's names plus
     ``entity_id``.
     """
-    from .checkpoints import tracked_local_checkpoint
     from .graph import connected_components
 
     edges = record_linkage_pairs(
@@ -524,7 +525,7 @@ def linkage_resolve_core(
         edges.select("id_a", "id_b"), vertices=batch.select(id_col)
     )
     if hist is None:
-        return tracked_local_checkpoint(
+        return stage(
             comps.select(
                 F.col("id").alias(id_col),
                 F.col("cluster_id").alias("entity_id"),
@@ -544,7 +545,7 @@ def linkage_resolve_core(
         .groupBy("cluster_id")
         .agg(F.min("id_b").alias("_hist_ent"))
     )
-    return tracked_local_checkpoint(
+    return stage(
         comps.join(cluster_ent, "cluster_id", "left").select(
             F.col("id").alias(id_col),
             F.coalesce(F.col("_hist_ent"), F.col("cluster_id")).alias(
@@ -594,8 +595,6 @@ def incremental_record_linkage(
         new_df = new_df.join(
             hist.select(F.col(id_col)), id_col, "left_anti"
         )
-    from .checkpoints import tracked_local_checkpoint
-
     assigned = linkage_resolve_core(
         new_df, hist, id_col, block_cols, comparators, threshold
     )
@@ -604,7 +603,7 @@ def incremental_record_linkage(
     # while it re-executes would re-list the store and, under a
     # non-deterministic upstream, append rows that diverge from the
     # already-returned assignments (review r10)
-    rows = tracked_local_checkpoint(new_df.join(assigned, id_col))
+    rows = stage(new_df.join(assigned, id_col))
     rows.write.mode("append").parquet(store_path)
     return assigned
 
@@ -635,20 +634,12 @@ def erase_from_linkage_store(
     cannot resurrect an erased record in store or sink. Returns
     erase_rows' ``{rows_before, rows_erased, rows_after}``.
     """
-    from .checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
     from .dedup import _resolve_tombstone, tombstone_store_path
     from .layout import erase_rows
 
     keys = ids.select(id_col)
-    with track_checkpoints() as _cp:
+    with staged(spark):
         if _resolve_tombstone(spark, store_path, tombstone):
-            keys = tracked_local_checkpoint(keys)
+            keys = stage(keys)
             keys.write.mode("append").parquet(tombstone_store_path(store_path))
-        try:
-            return erase_rows(spark, store_path, keys, key_col=id_col)
-        finally:
-            unpersist_ids(spark, _cp)
+        return erase_rows(spark, store_path, keys, key_col=id_col)

@@ -43,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .aggregate import STABLE_DECIMAL
+from .checkpoints import stage
 
 #: Adjacent word pairs; guarded because Spark's sequence(1, 0) DESCENDS —
 #: a 1-token doc must contribute no bigrams, not a wrapped pair.
@@ -225,15 +226,18 @@ def dsir_importance_weights(
     One-pass discipline: the class tag rides THROUGH the feature explode
     (no corpus-vs-corpus tag join), and the compact per-doc bucket-count
     table — ≤ bucket-space rows per document, far smaller than the text
-    it summarizes — is localCheckpointed so the histogram pass and the
+    it summarizes — is staged so the histogram pass and the
     scoring pass both read it instead of re-scanning and re-exploding
     the corpus (the engine's materialize-the-compressed-form rule; cf.
     the kNN graph's signature table).
     """
-    feats = tagged_features(
-        docs, is_target, id_col=id_col, text_col=text_col,
-        hex_chars=hex_chars, bigrams=bigrams,
-    ).localCheckpoint(eager=False)
+    feats = stage(
+        tagged_features(
+            docs, is_target, id_col=id_col, text_col=text_col,
+            hex_chars=hex_chars, bigrams=bigrams,
+        ),
+        eager=False,
+    )
     lam = dsir_log_ratios(_hist_from_features(feats), hex_chars=hex_chars)
     return (
         feats.filter(~F.col("_tgt"))

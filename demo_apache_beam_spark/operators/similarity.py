@@ -40,6 +40,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .checkpoints import stage
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -1055,7 +1057,7 @@ def brute_force_topk_blocked(
     local top-k per query (plus boundary ties), so the final exact rank
     sees ≤ (k + ties)·batches rows per query, never the N·Q cross
     product. Multi-block runs eagerly materialize each block's (small)
-    candidate set with ``localCheckpoint`` and then destroy that block's
+    candidate set with ``checkpoints.stage`` and then destroy that block's
     broadcast, so total broadcast footprint stays O(block), not O(Q) —
     this is what makes queries == corpus (the kNN-graph case) viable at
     scale: O(N/B) corpus scans, never O(N·d) driver or executor memory.
@@ -1137,11 +1139,11 @@ def brute_force_topk_blocked(
 
 
 def _materialize_block(c, arrays, k, score_budget, query_id_col):
-    """Run one block's corpus scan NOW (eager localCheckpoint of the
+    """Run one block's corpus scan NOW (eager ``stage`` of the
     ≤(k+ties)·batches·block_rows candidate rows), then free the block's
     broadcast so concurrent executor memory stays O(one block)."""
     cand, bq = _blocked_candidates(c, *arrays, k, score_budget, query_id_col)
-    out = cand.localCheckpoint(eager=True)
+    out = stage(cand)
     try:
         bq.destroy()
     except Exception:
@@ -1591,7 +1593,7 @@ def ann_knn_graph(
       from the :func:`lsh_save_bucketed` layout (bucketed + sorted by
       (_tbl, _sig)) the self-join is co-partitioned — **exchange-free**,
       pinned by the plan pytest. Without an index the signatures are
-      computed inline and localCheckpointed (the single-run stand-in).
+      computed inline and staged (the single-run stand-in).
       ``max_bucket`` opts into the mega-bucket guard (see
       :func:`lsh_self_candidates`) for corpora with dense
       near-identical clusters.
@@ -1669,7 +1671,7 @@ def ann_knn_graph(
             # re-execute the signature UDF — i.e. scan the corpus
             # twice. This is the single-run stand-in for the persisted
             # signature table above.
-            sigs = _table_sigs(c_vec, "_id", "_v", tables).localCheckpoint()
+            sigs = stage(_table_sigs(c_vec, "_id", "_v", tables))
         # unordered pairs: the bucket self-join is symmetric and cosine
         # is exactly symmetric (x*y == y*x, na*nb == nb*na in IEEE), so
         # each pair is deduped, vector-fetched and scored ONCE and the
@@ -2195,7 +2197,6 @@ def incremental_kmeans_assign(
     consumer does the same.
     """
     from .dedup import _hadoop_path_exists
-    from .checkpoints import tracked_local_checkpoint
 
     spark = new_df.sparkSession
     # ids must be unique WITHIN the increment too — the store holds one
@@ -2223,7 +2224,7 @@ def incremental_kmeans_assign(
         assigned, cents = distributed_kmeans(
             new_df, k=k, iters=iters, id_col=id_col, vec_col=vec_col
         )
-        assigned = tracked_local_checkpoint(assigned)
+        assigned = stage(assigned)
         write_kmeans_store(spark, store_path, assigned, cents)
         return assigned
     cent_rows = spark.read.parquet(cent_path).orderBy("cluster").collect()
@@ -2234,7 +2235,7 @@ def incremental_kmeans_assign(
         fresh, centroids, id_col=id_col, vec_col=vec_col, kernel=kernel
     )
     # freeze before the store mutates (the plan reads the store's id set)
-    assigned = tracked_local_checkpoint(assigned)
+    assigned = stage(assigned)
     assigned.write.mode("append").parquet(assign_path)
     return assigned
 

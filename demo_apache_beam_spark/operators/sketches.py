@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .checkpoints import stage
+
 
 def _mg_update(counters: dict, item, w: int, cap: int) -> None:
     """One weighted Misra-Gries update against a bounded counter map."""
@@ -227,21 +229,19 @@ def kmv_pair_estimates(sketches: DataFrame, key_col: str, k: int) -> DataFrame:
     is a pure function of hx, so struct equality IS hash equality and
     the array math replays the rank-window formulation bit-for-bit.
 
-    The one-row-per-key sketch table is staged once (lazy tracked
-    ``localCheckpoint`` — ledger-scoped callers such as a streaming
-    monitor can release the pinned blocks): it feeds both sides of the
+    The one-row-per-key sketch table is staged once (lazy ``stage`` —
+    a caller's ``staged`` scope, such as a streaming monitor's,
+    releases the pinned blocks): it feeds both sides of the
     pair self-join, and without the barrier each side re-executes the
     WHOLE sketch build — the full-corpus distinct + bottom-k window.
     The build side is hint-broadcast (k·|keys| sketch rows — bounded by
     the key universe, never the item domain) because the checkpoint
     hides size statistics from the planner.
     """
-    from .checkpoints import tracked_local_checkpoint
-
     arr = sketches.groupBy(key_col).agg(
         F.sort_array(F.collect_list(F.struct("hx", "f"))).alias("_sk")
     )
-    arr = tracked_local_checkpoint(arr, eager=False)
+    arr = stage(arr, eager=False)
     a = arr.select(F.col(key_col).alias("_ka"), F.col("_sk").alias("_sa"))
     b = arr.select(F.col(key_col).alias("_kb"), F.col("_sk").alias("_sb"))
     pairs = a.join(F.broadcast(b), F.col("_ka") < F.col("_kb"))

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoints import stage
+
 #: One token = a maximal [a-z0-9]+ run over the lowercased text — the
 #: whitespace+punctuation tokenizer, portable across engines.
 TOKEN_RE = "[a-z0-9]+"
@@ -281,7 +283,7 @@ def bpe_merges(
     # in-process collect reads the checkpoint blocks back (no second
     # aggregate), and the oversized case never holds vocab rows on the
     # driver just to discard them (ADVICE r6).
-    vocab = vocab_plan.localCheckpoint()
+    vocab = stage(vocab_plan)
     if vocab.limit(driver_finish_max_vocab + 1).count() <= driver_finish_max_vocab:
         merges = _bpe_merges_inprocess(
             [(r["syms"], r["weight"]) for r in vocab.collect()], n_merges
@@ -321,7 +323,7 @@ def bpe_merges(
         fused = vocab.withColumn(
             "syms", F.regexp_replace("syms", pattern, (left + right).replace("$", "\\$"))
         )
-        vocab = fused.localCheckpoint()
+        vocab = stage(fused)
 
     return spark.createDataFrame(
         merges, "step int, left string, right string, merged string, pair_count long"

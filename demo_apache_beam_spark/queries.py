@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.aggregate import stable_avg, stable_sum, sum_scores, windowed_sum_scores
+from .operators.checkpoints import stage
 from .operators.filters import filter_time_range
 from .operators.parse import events_to_game_lines, parse_game_events, with_corrupt_lines
 from .operators.selection import is_eval_doc, is_eval_doc_sql
@@ -2967,11 +2968,10 @@ def important_part_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Staged: both the threshold and the filter branch read this per-part
     # aggregate; localCheckpoint materializes it once (O(|parts|) rows) so
     # the lineitem fact is scanned exactly once (plan-tested).
-    supplied = (
+    supplied = stage(
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy("l_partkey")
         .agg(F.sum(F.col("l_extendedprice").cast(STABLE_DECIMAL)).alias("sv_dec"))
-        .localCheckpoint()
     )
     threshold = supplied.agg(
         (F.sum("sv_dec").cast("double") * F.lit(0.001)).alias("__threshold")
@@ -4849,7 +4849,7 @@ def media_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one GIF encode+decode+hash pass, not three (the auto-count + both
     # self-join sides — the same contract as the other media queries)
-    sigs = video_dhash(gifs).localCheckpoint()
+    sigs = stage(video_dhash(gifs))
     return hamming_near_pairs(
         sigs, id_col="media_id", sig_col="vdhash", max_hamming=10
     )
@@ -6320,8 +6320,6 @@ def _stored(spark: SparkSession, name: str, sf_dir: str, source_tables,
     so the fallback, like the store, materializes the rows once for
     every consumer that reads them. Builds are deterministic, so the
     stored rows equal an inline run."""
-    from .operators.checkpoints import tracked_local_checkpoint
-
     try:
         return _bootstrap_store(
             spark,
@@ -6333,7 +6331,7 @@ def _stored(spark: SparkSession, name: str, sf_dir: str, source_tables,
             lambda path, _t: spark.read.parquet(path),
         )
     except _store_errors():
-        return tracked_local_checkpoint(inline())
+        return stage(inline())
 
 
 def _knn_graph_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8343,7 +8341,7 @@ def concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bucket_us = 3_600_000_000  # 1 hour
     ev = _events(spark, sf_dir).select("user_id", F.col("ts").alias("event_time"))
-    sess = (
+    sess = stage(
         ev.groupBy(session_window(30).alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -8352,7 +8350,7 @@ def concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("w.end").alias("en"),
             "n_events",
         )
-    ).localCheckpoint()
+    )
     spans = sess.withColumn(
         "bucket",
         F.explode(
@@ -10160,7 +10158,7 @@ def doc_length_rank_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    ids = (
+    ids = stage(
         ev.filter(
             ((F.col("user_id") % F.lit(1000)) * F.lit(2654435761))
             % F.lit(1000)
@@ -10171,7 +10169,6 @@ def user_erasure_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # freeze the request set: the events audit self-joins events, and
         # a frozen plan also mirrors how a real DSR queue arrives as a
         # static literal table
-        .localCheckpoint()
     )
     cust = load_table(spark, sf_dir, "customer")
     orders = load_table(spark, sf_dir, "orders")
@@ -10258,7 +10255,7 @@ def user_erasure_audit_views(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.catalog import catalog_entries
 
     ev = load_table(spark, sf_dir, "events")
-    ids = (
+    ids = stage(
         ev.filter(
             ((F.col("user_id") % F.lit(1000)) * F.lit(2654435761))
             % F.lit(1000)
@@ -10266,7 +10263,6 @@ def user_erasure_audit_views(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("user_id").alias("__erase_id"))
         .distinct()
-        .localCheckpoint()
     )
 
     def audit(df, key, name):
@@ -10616,7 +10612,6 @@ def embedding_kmeans_delta_assign(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def retrieval_eval_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
-    from .operators.checkpoints import tracked_local_checkpoint
     from .operators.retrieval import ranking_eval, sq8_codes
     from .operators.similarity import brute_force_topk
 
@@ -10624,23 +10619,23 @@ def retrieval_eval_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries_df = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    # Stage the three shared intermediates once (lazy tracked
-    # localCheckpoint — ledger-scoped callers can release the pinned
-    # blocks): without it, every reuse re-executes the subtree it
-    # names — the sq8 quantize pass (posexplode + decimal-norm groupBy
-    # + join) appeared on BOTH sides of the candidate join, the
+    # Stage the three shared intermediates once (lazy ``stage`` — a
+    # caller's ``staged`` scope releases the pinned blocks): without
+    # it, every reuse re-executes the subtree it names — the sq8
+    # quantize pass (posexplode + decimal-norm groupBy + join)
+    # appeared on BOTH sides of the candidate join, the
     # exact-cosine truth pass ran twice inside ranking_eval (hits join
     # + |truth| guard), and the candidate ranking three times — 12
     # parquet scans of embeddings in one plan. truth/cand are
     # k·|queries| rows; codes is the long-form code table the scoring
     # join needs materialized anyway.
-    truth = tracked_local_checkpoint(
+    truth = stage(
         brute_force_topk(emb, queries_df, k=10).select(
             "query_id", "neighbor_id"
         ),
         eager=False,
     )
-    codes = tracked_local_checkpoint(sq8_codes(emb), eager=False)
+    codes = stage(sq8_codes(emb), eager=False)
     qc = codes.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), "dim", F.col("code").alias("qcode")
     )
@@ -10651,7 +10646,7 @@ def retrieval_eval_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("qcode") * F.col("code")).alias("iscore"))
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("iscore"), F.asc("vec_id"))
-    cand = tracked_local_checkpoint(
+    cand = stage(
         scored.select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),

@@ -32,7 +32,7 @@ replay-idempotent BY CONSTRUCTION: every stage keeps its own
 ``_batch_id`` partition overwrite + ``< epoch`` history probe, so a
 redelivered epoch re-reads identical stage inputs and rewrites exactly
 its own partitions across ALL stores at once — the cross-operator
-axis (shared session, shared checkpoint ledger, shared file-listing
+axis (shared session, shared staging scopes, shared file-listing
 caches) that per-store tests cannot exercise and that previously hid
 the session-global RDD-unpersist and store-memo-poisoning bugs.
 

@@ -130,7 +130,7 @@ def make_near_dedup_ingest(
     probe exist to provide."""
     from pyspark.sql import functions as F
 
-    from ..operators.checkpoints import track_checkpoints, unpersist_ids
+    from ..operators.checkpoints import stage, staged
     from ..operators.dedup import (
         _hadoop_path_exists,
         band_rows,
@@ -140,8 +140,6 @@ def make_near_dedup_ingest(
     )
     from .idempotent import write_windowed_idempotent
 
-    from ..operators.checkpoints import tracked_local_checkpoint
-
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -149,85 +147,78 @@ def make_near_dedup_ingest(
         # survivor set must be FROZEN before the store mutates, and a
         # lost block must fail, never silently recompute against the
         # mutated store). Checkpoint blocks are not auto-freed, so a
-        # long-running stream would accumulate them without bound — a
-        # thread-local ledger records the RDD id behind every checkpoint
-        # THIS batch takes (foreachBatch runs the body on one thread),
-        # and cleanup releases exactly those ids once the writes are
-        # durable. A global before/after diff of the persistent-RDD map
-        # would also catch — and irrecoverably unpersist — checkpoints a
-        # CONCURRENT job in the same session took during the window
-        # (ADVICE r6); the ledger cannot, by construction.
-        with track_checkpoints() as ckpt_ids:
-            try:
-                # erasure tombstones (review r10): a replayed epoch
-                # re-derives its rows from the redelivered SOURCE batch,
-                # so a compliance delete on the store alone would be
-                # silently resurrected by crash recovery. Documents
-                # whose band rows ALL match the tombstone set (i.e.
-                # exactly the erased content — a fresh near-dup shares
-                # only some bands and passes to the normal decision) are
-                # removed from the increment before anything else, on
-                # every delivery, first or replayed. The band rows are
-                # checkpointed ONCE and the filtered remainder feeds the
-                # core — without the handoff the dominant shingle+
-                # MinHash pass ran twice per epoch (review r10).
-                banded_in = None
-                ts_path = tombstone_store_path(store_path)
-                if _hadoop_path_exists(spark, ts_path):
-                    tomb = spark.read.parquet(ts_path)
-                    bb = tracked_local_checkpoint(
-                        band_rows(
-                            minhash_signatures(
-                                batch_df, id_col, text_col, num_hashes,
-                                shingle_n,
-                            ),
-                            id_col,
-                            num_hashes,
-                            bands,
-                        )
+        # long-running stream would accumulate them without bound — the
+        # staged scope releases exactly the blocks THIS batch staged
+        # (foreachBatch runs the body on one thread) once the writes
+        # are durable, and never a concurrent job's.
+        with staged(spark):
+            # erasure tombstones (review r10): a replayed epoch
+            # re-derives its rows from the redelivered SOURCE batch,
+            # so a compliance delete on the store alone would be
+            # silently resurrected by crash recovery. Documents
+            # whose band rows ALL match the tombstone set (i.e.
+            # exactly the erased content — a fresh near-dup shares
+            # only some bands and passes to the normal decision) are
+            # removed from the increment before anything else, on
+            # every delivery, first or replayed. The band rows are
+            # checkpointed ONCE and the filtered remainder feeds the
+            # core — without the handoff the dominant shingle+
+            # MinHash pass ran twice per epoch (review r10).
+            banded_in = None
+            ts_path = tombstone_store_path(store_path)
+            if _hadoop_path_exists(spark, ts_path):
+                tomb = spark.read.parquet(ts_path)
+                bb = stage(
+                    band_rows(
+                        minhash_signatures(
+                            batch_df, id_col, text_col, num_hashes,
+                            shingle_n,
+                        ),
+                        id_col,
+                        num_hashes,
+                        bands,
                     )
-                    per_doc = bb.groupBy(id_col).agg(
-                        F.count(F.lit(1)).alias("_n")
-                    )
-                    matched = (
-                        bb.join(tomb, ["band_idx", "band_hash"], "left_semi")
-                        .groupBy(id_col)
-                        .agg(F.count(F.lit(1)).alias("_m"))
-                    )
-                    blocked = (
-                        per_doc.join(matched, id_col)
-                        .filter(F.col("_n") == F.col("_m"))
-                        .select(id_col)
-                    )
-                    batch_df = batch_df.join(blocked, id_col, "left_anti")
-                    if batch_df.isEmpty():
-                        return
-                    banded_in = bb.join(blocked, id_col, "left_anti")
-                hist = None
-                if _hadoop_path_exists(spark, store_path):
-                    hist = spark.read.parquet(store_path).filter(
-                        F.col("_batch_id") < F.lit(batch_id)
-                    )
-                survivors, banded = minhash_near_dedup_core(
-                    batch_df, hist, id_col, text_col, num_hashes, bands,
-                    shingle_n, banded=banded_in,
                 )
-                write_windowed_idempotent(
-                    banded.join(survivors, id_col, "left_semi")
-                    .select("band_idx", "band_hash")
-                    .withColumn("_batch_id", F.lit(batch_id)),
-                    store_path,
-                    partition_col="_batch_id",
+                per_doc = bb.groupBy(id_col).agg(
+                    F.count(F.lit(1)).alias("_n")
                 )
-                write_windowed_idempotent(
-                    batch_df.join(survivors, id_col, "left_semi").withColumn(
-                        "_batch_id", F.lit(batch_id)
-                    ),
-                    out_dir,
-                    partition_col="_batch_id",
+                matched = (
+                    bb.join(tomb, ["band_idx", "band_hash"], "left_semi")
+                    .groupBy(id_col)
+                    .agg(F.count(F.lit(1)).alias("_m"))
                 )
-            finally:
-                unpersist_ids(spark, ckpt_ids)
+                blocked = (
+                    per_doc.join(matched, id_col)
+                    .filter(F.col("_n") == F.col("_m"))
+                    .select(id_col)
+                )
+                batch_df = batch_df.join(blocked, id_col, "left_anti")
+                if batch_df.isEmpty():
+                    return
+                banded_in = bb.join(blocked, id_col, "left_anti")
+            hist = None
+            if _hadoop_path_exists(spark, store_path):
+                hist = spark.read.parquet(store_path).filter(
+                    F.col("_batch_id") < F.lit(batch_id)
+                )
+            survivors, banded = minhash_near_dedup_core(
+                batch_df, hist, id_col, text_col, num_hashes, bands,
+                shingle_n, banded=banded_in,
+            )
+            write_windowed_idempotent(
+                banded.join(survivors, id_col, "left_semi")
+                .select("band_idx", "band_hash")
+                .withColumn("_batch_id", F.lit(batch_id)),
+                store_path,
+                partition_col="_batch_id",
+            )
+            write_windowed_idempotent(
+                batch_df.join(survivors, id_col, "left_semi").withColumn(
+                    "_batch_id", F.lit(batch_id)
+                ),
+                out_dir,
+                partition_col="_batch_id",
+            )
 
     return ingest
 
@@ -316,7 +307,7 @@ def make_hamming_near_dedup_ingest(
     to one call."""
     from pyspark.sql import functions as F
 
-    from ..operators.checkpoints import track_checkpoints, unpersist_ids
+    from ..operators.checkpoints import staged
     from ..operators.dedup import (
         _hadoop_path_exists,
         incremental_hamming_dedup_core,
@@ -332,11 +323,11 @@ def make_hamming_near_dedup_ingest(
             hist = spark.read.parquet(store_path).filter(
                 F.col("_batch_id") < F.lit(batch_id)
             )
-        # the ledger pattern of make_near_dedup_ingest: the core
-        # checkpoints the (id, sig) rows (freezing the survivor
-        # decision AND pinning the decode to one pass); release
-        # exactly this batch's blocks once the writes are durable
-        with track_checkpoints() as ckpt_ids:
+        # the staged scope of make_near_dedup_ingest: the core
+        # stages the (id, sig) rows (freezing the survivor decision
+        # AND pinning the decode to one pass); release exactly this
+        # batch's blocks once the writes are durable
+        with staged(spark):
             sigs = fingerprint(batch_df)
             # erasure tombstones (review r10): items whose signature
             # EXACTLY matches an erased one are removed from the
@@ -358,23 +349,20 @@ def make_hamming_near_dedup_ingest(
                 sigs, hist, id_col=id_col, sig_col=sig_col,
                 max_hamming=max_hamming,
             )
-            try:
-                write_windowed_idempotent(
-                    banded.join(survivors, id_col, "left_semi")
-                    .select(sig_col, "band_idx", "band_val")
-                    .withColumn("_batch_id", F.lit(batch_id)),
-                    store_path,
-                    partition_col="_batch_id",
-                )
-                write_windowed_idempotent(
-                    batch_df.join(survivors, id_col, "left_semi").withColumn(
-                        "_batch_id", F.lit(batch_id)
-                    ),
-                    out_dir,
-                    partition_col="_batch_id",
-                )
-            finally:
-                unpersist_ids(spark, ckpt_ids)
+            write_windowed_idempotent(
+                banded.join(survivors, id_col, "left_semi")
+                .select(sig_col, "band_idx", "band_val")
+                .withColumn("_batch_id", F.lit(batch_id)),
+                store_path,
+                partition_col="_batch_id",
+            )
+            write_windowed_idempotent(
+                batch_df.join(survivors, id_col, "left_semi").withColumn(
+                    "_batch_id", F.lit(batch_id)
+                ),
+                out_dir,
+                partition_col="_batch_id",
+            )
 
     return ingest
 
@@ -571,7 +559,7 @@ def make_exact_dedup_ingest(
     and re-read per epoch just to carry ids)."""
     from pyspark.sql import functions as F
 
-    from ..operators.checkpoints import track_checkpoints, unpersist_ids
+    from ..operators.checkpoints import staged
     from ..operators.dedup import (
         _hadoop_path_exists,
         content_key,
@@ -602,27 +590,24 @@ def make_exact_dedup_ingest(
             hist = spark.read.parquet(store_path).filter(
                 F.col("_batch_id") < F.lit(batch_id)
             )
-        with track_checkpoints() as ckpt_ids:
+        with staged(spark):
             firsts = exact_dedup_core(batch_df, hist, key_cols, id_col)
             out = batch_df.join(
                 firsts.select(id_col), id_col, "left_semi"
             )
             if sink_cols is not None:
                 out = out.select(*sink_cols)
-            try:
-                write_windowed_idempotent(
-                    firsts.select("_ck").withColumn(
-                        "_batch_id", F.lit(batch_id)
-                    ),
-                    store_path,
-                    partition_col="_batch_id",
-                )
-                write_windowed_idempotent(
-                    out.withColumn("_batch_id", F.lit(batch_id)),
-                    out_dir,
-                    partition_col="_batch_id",
-                )
-            finally:
-                unpersist_ids(spark, ckpt_ids)
+            write_windowed_idempotent(
+                firsts.select("_ck").withColumn(
+                    "_batch_id", F.lit(batch_id)
+                ),
+                store_path,
+                partition_col="_batch_id",
+            )
+            write_windowed_idempotent(
+                out.withColumn("_batch_id", F.lit(batch_id)),
+                out_dir,
+                partition_col="_batch_id",
+            )
 
     return ingest

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.checkpoints import stage
 from ..operators.selection import corpus_histogram, jsd_of_histograms, load_histogram
 
 
@@ -41,7 +42,8 @@ def make_drift_ingest(
     the pinned reference and write this epoch's monitor row."""
     from .idempotent import write_windowed_idempotent
 
-    ref = load_histogram(spark, reference_hist_path).localCheckpoint()
+    # pinned for the stream's lifetime (built outside any staged scope)
+    ref = stage(load_histogram(spark, reference_hist_path))
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

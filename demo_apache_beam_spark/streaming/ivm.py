@@ -90,6 +90,7 @@ def make_ivm_ingest(
     ledger entries bind to (module docstring; pass the checkpoint
     location for a real stream — a foreign-identity ledger is refused
     loudly rather than risking silent skips)."""
+    from ..operators.checkpoints import staged
     from ..operators.ivm import apply_join_increment, ivm_ledger_guard
 
     if right_deltas is None and empty_right_schema is None:
@@ -108,19 +109,22 @@ def make_ivm_ingest(
             if right_deltas is not None
             else spark.createDataFrame([], empty_right_schema)
         )
-        apply_join_increment(
-            spark,
-            store_path,
-            batch_df,
-            dr,
-            on=on,
-            num_buckets=num_buckets,
-            prune_col=prune_col,
-            agg=agg,
-            epoch=int(batch_id),
-            stream_id=stream_id,
-            partition_col=partition_col,
-        )
+        # the increment returns its view delta staged; release it with
+        # the batch, or the stream pins one RDD per micro-batch
+        with staged(spark):
+            apply_join_increment(
+                spark,
+                store_path,
+                batch_df,
+                dr,
+                on=on,
+                num_buckets=num_buckets,
+                prune_col=prune_col,
+                agg=agg,
+                epoch=int(batch_id),
+                stream_id=stream_id,
+                partition_col=partition_col,
+            )
 
     return ingest
 

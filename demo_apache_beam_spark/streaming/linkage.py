@@ -105,11 +105,7 @@ def make_linkage_ingest(
         comparators = comparators_with_fitted_weights(comparators, fitted)
         threshold = fs_decision_threshold(fitted)
 
-    from ..operators.checkpoints import (
-        track_checkpoints,
-        tracked_local_checkpoint,
-        unpersist_ids,
-    )
+    from ..operators.checkpoints import stage, staged
     from ..operators.dedup import _hadoop_path_exists, tombstone_store_path
     from ..operators.linkage import linkage_resolve_core
     from .idempotent import write_windowed_idempotent
@@ -146,28 +142,25 @@ def make_linkage_ingest(
             )
             if batch_df.isEmpty():
                 return  # pure resubmission: nothing new to resolve
-        with track_checkpoints() as ckpt_ids:
-            try:
-                assigned = linkage_resolve_core(
-                    batch_df, hist, id_col, block_cols, comparators, threshold
-                )
-                # freeze the registry rows BEFORE the store-mutating
-                # write (mirrors incremental_record_linkage, review
-                # r10): the join plan embeds the live store read via
-                # the hist/tombstone anti-joins, so a task retry during
-                # the write would re-list the store mid-mutation
-                rows = tracked_local_checkpoint(batch_df.join(assigned, id_col))
-                write_windowed_idempotent(
-                    rows.withColumn("_batch_id", F.lit(batch_id)),
-                    store_path,
-                    partition_col="_batch_id",
-                )
-                write_windowed_idempotent(
-                    assigned.withColumn("_batch_id", F.lit(batch_id)),
-                    out_dir,
-                    partition_col="_batch_id",
-                )
-            finally:
-                unpersist_ids(spark, ckpt_ids)
+        with staged(spark):
+            assigned = linkage_resolve_core(
+                batch_df, hist, id_col, block_cols, comparators, threshold
+            )
+            # freeze the registry rows BEFORE the store-mutating
+            # write (mirrors incremental_record_linkage, review
+            # r10): the join plan embeds the live store read via
+            # the hist/tombstone anti-joins, so a task retry during
+            # the write would re-list the store mid-mutation
+            rows = stage(batch_df.join(assigned, id_col))
+            write_windowed_idempotent(
+                rows.withColumn("_batch_id", F.lit(batch_id)),
+                store_path,
+                partition_col="_batch_id",
+            )
+            write_windowed_idempotent(
+                assigned.withColumn("_batch_id", F.lit(batch_id)),
+                out_dir,
+                partition_col="_batch_id",
+            )
 
     return ingest

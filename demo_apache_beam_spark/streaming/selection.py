@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.checkpoints import stage
 from ..operators.selection import dsir_load_model, dsir_log_ratios, dsir_score
 
 
@@ -39,9 +40,11 @@ def make_dsir_scoring_ingest(
     model and write under this epoch's partition."""
     from .idempotent import write_windowed_idempotent
 
-    lam = dsir_log_ratios(
-        dsir_load_model(spark, model_path), hex_chars=hex_chars
-    ).localCheckpoint()  # pin the model version; never recompute per batch
+    # pin the model version for the stream's lifetime (built outside
+    # any staged scope); never recompute per batch
+    lam = stage(
+        dsir_log_ratios(dsir_load_model(spark, model_path), hex_chars=hex_chars)
+    )
 
     def ingest(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():

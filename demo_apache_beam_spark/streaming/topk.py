@@ -142,28 +142,20 @@ class TableTopKStore:
         else:
             merged = changed
         # cut lineage off the store files before overwriting them; the
-        # ledger releases the checkpoint blocks once the write is
-        # durable — one pinned RDD per micro-batch would otherwise
-        # accumulate for the stream's lifetime (and a global
-        # persistent-RDD diff could free a concurrent job's blocks)
-        from ..operators.checkpoints import (
-            track_checkpoints,
-            tracked_local_checkpoint,
-            unpersist_ids,
-        )
+        # scope releases the staged blocks once the write is durable —
+        # one pinned RDD per micro-batch would otherwise accumulate for
+        # the stream's lifetime
+        from ..operators.checkpoints import stage, staged
 
-        with track_checkpoints() as ckpt_ids:
-            out = tracked_local_checkpoint(merged)
-            try:
-                (
-                    out.coalesce(1)
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("window_start")
-                    .parquet(self.path)
-                )
-            finally:
-                unpersist_ids(self.spark, ckpt_ids)
+        with staged(self.spark):
+            (
+                stage(merged)
+                .coalesce(1)
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("window_start")
+                .parquet(self.path)
+            )
 
     def totals_df(self) -> DataFrame | None:
         return self._existing()

@@ -1,17 +1,19 @@
-"""Scoped checkpoint tracking: cleanup must free exactly the RDDs the
-tracked scope created — a concurrent job's checkpoint taken during the
-window must survive (localCheckpoint truncates lineage, so unpersisting
-it is unrecoverable), and the scope's own blocks must all be released."""
+"""Scoped staging: a ``staged`` scope must free exactly the RDDs staged
+inside it — a concurrent job's checkpoint taken during the window must
+survive (localCheckpoint truncates lineage, so unpersisting it is
+unrecoverable), an enclosing scope's pins must survive an inner scope,
+and the scope's own blocks must all be released, on error too."""
 
 from __future__ import annotations
 
+import contextlib
+import pathlib
 import threading
 
-from demo_apache_beam_spark.operators.checkpoints import (
-    track_checkpoints,
-    tracked_local_checkpoint,
-    unpersist_ids,
-)
+import pytest
+
+import demo_apache_beam_spark
+from demo_apache_beam_spark.operators.checkpoints import _release, stage, staged
 
 
 def _persistent_ids(spark):
@@ -21,55 +23,104 @@ def _persistent_ids(spark):
     }
 
 
+def _rdd_id(df):
+    return int(df._jdf.queryExecution().analyzed().rdd().id())
+
+
 def test_cleanup_spares_concurrent_checkpoints(spark):
-    """A plain localCheckpoint taken while a ledger is open (the
-    concurrent-job stand-in: the r6 global before/after diff would have
-    unpersisted it) survives unpersist_ids, stays in the persistent map,
-    and is still collectable; the tracked checkpoints are all gone."""
-    with track_checkpoints() as ids:
-        mine = tracked_local_checkpoint(spark.range(100).selectExpr("id * 2 AS v"))
-        theirs = spark.range(50).selectExpr("id + 1 AS w").localCheckpoint()
-        mine.count()
-    assert ids and set(ids) <= _persistent_ids(spark)
-    unpersist_ids(spark, ids)
-    remaining = _persistent_ids(spark)
-    assert not (set(ids) & remaining)
-    theirs_id = int(theirs._jdf.queryExecution().analyzed().rdd().id())
-    assert theirs_id in remaining
-    assert theirs.count() == 50  # blocks intact, not just map entry
-    theirs.rdd.unpersist()
+    """Two inputs. Flat: a plain localCheckpoint taken while a scope is
+    open (the concurrent-job stand-in: a global before/after diff would
+    have unpersisted it). Nested: a pin of an enclosing scope, taken
+    before the inner scope opens. Either way the inner scope's exit
+    frees its own pin only; the other RDD stays in the persistent map
+    and is still collectable."""
+    for nested in (False, True):
+        outer = staged(spark) if nested else contextlib.nullcontext()
+        with outer:
+            theirs = stage(spark.range(50).selectExpr("id + 1 AS w")) if nested else None
+            with staged(spark):
+                mine = stage(spark.range(100).selectExpr("id * 2 AS v"))
+                if not nested:
+                    theirs = spark.range(50).selectExpr("id + 1 AS w").localCheckpoint()
+                assert mine.count() == 100
+                assert _rdd_id(mine) in _persistent_ids(spark)
+            remaining = _persistent_ids(spark)
+            assert _rdd_id(mine) not in remaining
+            assert _rdd_id(theirs) in remaining
+            assert theirs.count() == 50  # blocks intact, not just map entry
+        if nested:  # the outer scope releases its own pin on exit
+            assert _rdd_id(theirs) not in _persistent_ids(spark)
+        else:
+            _release(spark, [_rdd_id(theirs)])
 
 
 def test_ledger_is_thread_local(spark):
-    """A checkpoint taken on ANOTHER thread while this thread's ledger
-    is open must not land in it (each foreachBatch thread owns exactly
-    its own batch's checkpoints)."""
+    """A stage on ANOTHER thread while this thread's scope is open must
+    not land in it (each foreachBatch thread owns exactly its own
+    batch's pins): the scope's exit leaves it pinned."""
     other_ids = []
 
     def other_thread():
-        df = tracked_local_checkpoint(spark.range(10))
-        other_ids.append(int(df._jdf.queryExecution().analyzed().rdd().id()))
+        other_ids.append(_rdd_id(stage(spark.range(10))))
 
-    with track_checkpoints() as ids:
+    with staged(spark):
         t = threading.Thread(target=other_thread)
         t.start()
         t.join()
-    assert ids == []
-    unpersist_ids(spark, other_ids)
+    assert other_ids and set(other_ids) <= _persistent_ids(spark)
+    _release(spark, other_ids)
 
 
 def test_untracked_is_plain_checkpoint(spark):
-    """Outside any ledger the helper must behave exactly like
+    """Outside any scope ``stage`` must behave exactly like
     df.localCheckpoint(): materialized, pinned, correct rows."""
-    df = tracked_local_checkpoint(spark.range(7).selectExpr("id AS x"))
-    rid = int(df._jdf.queryExecution().analyzed().rdd().id())
+    df = stage(spark.range(7).selectExpr("id AS x"))
+    rid = _rdd_id(df)
     assert rid in _persistent_ids(spark)
     assert df.count() == 7
-    unpersist_ids(spark, [rid])
+    _release(spark, [rid])
+
+
+def test_erase_failure_leaves_no_pinned_rdds(spark, tmp_path, monkeypatch):
+    """The erase wrappers freeze their keys before appending the
+    tombstone; a failed append must still release the frozen keys."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from demo_apache_beam_spark.operators.dedup import erase_from_exact_store
+
+    parquet = DataFrameWriter.parquet
+
+    def failing_parquet(self, path, *a, **k):
+        if str(path).endswith("__tombstones"):
+            raise OSError("tombstone append failed")
+        return parquet(self, path, *a, **k)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_parquet)
+    docs = spark.createDataFrame([("erase me",)], "text string")
+    before = _persistent_ids(spark)
+    with pytest.raises(OSError, match="tombstone append failed"):
+        erase_from_exact_store(spark, str(tmp_path / "store"), docs, tombstone=True)
+    assert _persistent_ids(spark) == before
+
+
+def test_only_checkpoints_module_calls_local_checkpoint():
+    """Every staging call goes through ``stage``: a raw
+    ``.localCheckpoint(`` elsewhere in the package would pin its RDD
+    past any open scope."""
+    pkg = pathlib.Path(demo_apache_beam_spark.__file__).parent
+    home = pkg / "operators" / "checkpoints.py"
+    offenders = [
+        f"{path.relative_to(pkg)}:{n}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != home
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    assert offenders == []
 
 
 def test_topk_store_upsert_leaves_no_pinned_rdds(spark, tmp_path):
-    """Each upsert_batch checkpoints its merged slice; the blocks must be
+    """Each upsert_batch stages its merged slice; the blocks must be
     released once the overwrite is durable — a long-running stream would
     otherwise pin one RDD per micro-batch forever."""
     from demo_apache_beam_spark.streaming.topk import TableTopKStore
@@ -89,7 +140,7 @@ def test_topk_store_upsert_leaves_no_pinned_rdds(spark, tmp_path):
 
 
 def test_near_dedup_batch_leaves_no_pinned_rdds(spark, tmp_path):
-    """End-to-end: one ingest batch (which checkpoints bands, survivors,
+    """End-to-end: one ingest batch (which stages bands, survivors,
     and every connected-components round internally) must release all of
     them once its writes are durable."""
     from demo_apache_beam_spark.streaming.dedup import make_near_dedup_ingest
@@ -106,4 +157,23 @@ def test_near_dedup_batch_leaves_no_pinned_rdds(spark, tmp_path):
         "doc_id long, text string",
     )
     ingest(batch, 0)
+    assert _persistent_ids(spark) <= before
+
+
+def test_ivm_ingest_leaves_no_pinned_rdds(spark, tmp_path):
+    """A streamed IVM increment returns its view delta staged; the
+    ingest must release it (and the delta freezes) with the batch."""
+    from pyspark.sql import functions as F
+
+    from demo_apache_beam_spark.streaming.ivm import make_ivm_ingest
+
+    ingest = make_ivm_ingest(
+        spark,
+        str(tmp_path / "store"),
+        on="k",
+        right_deltas=lambda b: b.groupBy("k").agg(F.count(F.lit(1)).alias("rv")),
+    )
+    before = _persistent_ids(spark)
+    for epoch in range(2):
+        ingest(spark.createDataFrame([(epoch, f"v{epoch}")], "k long, v string"), epoch)
     assert _persistent_ids(spark) <= before

@@ -1,9 +1,9 @@
-"""Capture .explain('formatted') for registry queries into plans/r13/.
+"""Capture .explain('formatted') for registry queries into plans/<tag>/.
 
-    python tools_r13_capture_plans.py before [name ...]
-    python tools_r13_capture_plans.py after  [name ...]
+    python tools_capture_plans.py <tag> <suffix> [name ...]
 
-With no names, captures every registry query. Store-backed queries may run
+writes plans/<tag>/<name>_<suffix>.txt, e.g. suffix ``before`` on the parent
+commit and ``after`` on the change. With no names, captures every registry query. Store-backed queries may run
 store-build jobs on first touch; plans are captured after that (steady state,
 the shape the bench times).
 """
@@ -16,18 +16,19 @@ REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
-suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-names = sys.argv[2:]
+if len(sys.argv) < 3:
+    sys.exit(__doc__)
+tag, suffix, names = sys.argv[1], sys.argv[2], sys.argv[3:]
 
 from demo_apache_beam_spark.plans.inspect import explain_str
 from demo_apache_beam_spark.queries import REGISTRY
 from demo_apache_beam_spark.session import get_spark
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-out_dir = os.path.join(REPO_ROOT, "plans", "r13")
+out_dir = os.path.join(REPO_ROOT, "plans", tag)
 os.makedirs(out_dir, exist_ok=True)
 
-spark = get_spark("plan-capture", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+spark = get_spark("plan-capture")
 
 todo = names or list(REGISTRY)
 for name in todo:

@@ -24,7 +24,7 @@ out_path = sys.argv[1] if len(sys.argv) > 1 else "/tmp/jobprofile.json"
 names = sys.argv[2:] or list(REGISTRY)
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark("jobprofile", cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+spark = get_spark("jobprofile")
 sc = spark.sparkContext
 
 # warm like bench.py does

@@ -1,6 +1,6 @@
 """Isolated per-query timing: clean session, bench-style warmup, median of N.
 
-    python tools_r13_timeq.py name [name ...]   # median-of-3 each
+    python tools_timeq.py name [name ...]   # median-of-3 each
 
 Mirrors bench.py's run_once (time from plan construction through noop write,
 staged blocks released between samples) so numbers are comparable.
@@ -20,7 +20,7 @@ from demo_apache_beam_spark.session import get_spark
 from demo_apache_beam_spark.sources.tables import load_table
 
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark("timeq", cpus=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+spark = get_spark("timeq")
 load_table(spark, sf_dir, "events").count()
 
 from bench import _release_staged_blocks  # noqa: E402
